@@ -9,12 +9,12 @@ lands in a catalog table as a sequence of atomic snapshot commits.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iceberg_catalog_postgres_spark.catalog.catalog import PostgresCatalog, TableIdentifier
+from iceberg_catalog_postgres_spark.catalog.queries import _fresh_catalog
 from iceberg_catalog_postgres_spark.registry import load, register
 
 
@@ -44,17 +44,6 @@ def attach_namespace(spark: SparkSession, catalog: PostgresCatalog, namespace: s
         catalog.load_table(ident).to_df(spark).createOrReplaceTempView(view)
         names.append(view)
     return names
-
-
-def _fresh_catalog(name: str) -> PostgresCatalog:
-    work = os.path.join(_REPO_ROOT, ".tmp", name)
-    shutil.rmtree(work, ignore_errors=True)
-    os.makedirs(work, exist_ok=True)
-    cat = PostgresCatalog.connect(
-        name, f"sqlite://{os.path.join(work, 'catalog.db')}", os.path.join(work, "warehouse")
-    )
-    cat.initialize()
-    return cat
 
 
 @register(

@@ -11,17 +11,16 @@ from __future__ import annotations
 
 import os
 import posixpath
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iceberg_catalog_postgres_spark.catalog.catalog import (
     CommitConflictError,
-    PostgresCatalog,
     TableIdentifier,
 )
 from iceberg_catalog_postgres_spark.catalog.metadata import chunk_path as _chunk_path
+from iceberg_catalog_postgres_spark.catalog.queries import _fresh_catalog
 from iceberg_catalog_postgres_spark.catalog.table import Table, transform_value
 from iceberg_catalog_postgres_spark.registry import load, register
 
@@ -1702,17 +1701,6 @@ def _cow_replace_files_commit(
     return table.catalog.update_table(
         table.identifier, new_location, table.metadata_location()
     )
-
-
-def _fresh_catalog(name: str) -> PostgresCatalog:
-    work = os.path.join(_REPO_ROOT, ".tmp", name)
-    shutil.rmtree(work, ignore_errors=True)
-    os.makedirs(work, exist_ok=True)
-    cat = PostgresCatalog.connect(
-        name, f"sqlite://{os.path.join(work, 'catalog.db')}", os.path.join(work, "warehouse")
-    )
-    cat.initialize()
-    return cat
 
 
 @register(

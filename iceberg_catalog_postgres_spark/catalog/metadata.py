@@ -10,9 +10,13 @@ fields <-> Spark ``StructType``, keeping the field id in
 
 Snapshots up to MANIFEST_THRESHOLD file entries embed their file lists
 directly; beyond that they spill to content-addressed manifest chunk files
-(Iceberg's manifest-list indirection), with additive commits reusing the
-parent's chunks plus one delta chunk — metadata JSON stays O(snapshots) and
-commit cost O(delta) at any file count. The pointer-swap commit protocol
+whose refs carry a summary (Iceberg's manifest-list indirection), with
+additive commits reusing the parent's chunks plus one delta chunk — metadata
+JSON stays O(snapshots) and commit cost O(delta) at any file count. Scan
+planners never pick a layout themselves: ``Table._data_entries`` is the one
+walk over a snapshot's data entries. Given a chunk test it skips chunks by
+summary and loads the rest; otherwise it walks the per-file dicts, which a
+chunked snapshot inflates once. The pointer-swap commit protocol
 (the part the reference actually implements) is identical either way.
 """
 
@@ -400,19 +404,18 @@ def plan_manifests(
     prev_snapshot: "Snapshot | None",
     staged_entries: list[dict] | None,
     snapshot: "Snapshot",
-    threshold: int | None = None,
 ) -> None:
     """Decide the manifest layout for ``snapshot`` (mutates
-    ``snapshot.manifests``): inline below the threshold; above it, reuse the
-    parent's chunks plus one delta chunk for additive operations
-    (append / MOR delete with ``staged_entries``), else one full rewrite."""
-    threshold = MANIFEST_THRESHOLD if threshold is None else threshold
+    ``snapshot.manifests``): inline up to ``MANIFEST_THRESHOLD`` entries;
+    above it, reuse the parent's chunks plus one delta chunk for additive
+    operations (append / MOR delete with ``staged_entries``), else one full
+    rewrite."""
     total = (
         len(snapshot.data_files)
         + len(snapshot.delete_files)
         + len(snapshot.position_delete_files)
     )
-    if total <= threshold:
+    if total <= MANIFEST_THRESHOLD:
         snapshot.manifests = None
         return
     additive = (
@@ -515,8 +518,8 @@ class Snapshot:
     metadata JSON; manifest-backed snapshots (``manifests`` set) keep only
     chunk refs there and inflate the lists LAZILY — loading a 10^7-file
     snapshot reads zero chunks until something actually needs the full file
-    list, and the chunk-summary planning paths (``Table.planned_files`` /
-    ``record_count``) never do. Field semantics:
+    list. Planning walks that pass a chunk test to ``Table._data_entries``
+    (and the summary folds of ``record_count``) never do. Field semantics:
 
     - ``data_files``: table-relative parquet paths.
     - ``delete_files``: equality-delete files (Iceberg v2 merge-on-read) —
@@ -677,9 +680,9 @@ class Snapshot:
 
     def chunk_refs(self) -> list[dict] | None:
         """Manifest-list refs WITH summaries, or None when the snapshot is
-        inline / legacy (some chunk lacks a summary) — callers then use the
-        inflated per-file dicts instead. The planning paths check this
-        first: a non-None return means two-level pruning is available."""
+        inline / legacy (some chunk lacks a summary). A non-None return means
+        two-level pruning is available: ``Table._data_entries`` then skips
+        chunks by summary; on None it walks the per-file dicts."""
         if not self.manifests:
             return None
         refs = [c for c in self.manifests if isinstance(c, dict) and c.get("summary")]
@@ -737,8 +740,7 @@ class Snapshot:
     def from_json(d: dict, store=None) -> "Snapshot":
         if "manifests" in d:
             # Deferred: chunk refs only — no chunk is fetched until a caller
-            # actually needs the inflated file lists. Summary-driven paths
-            # (planned_files / record_count) never do.
+            # actually needs the inflated file lists.
             return Snapshot(
                 snapshot_id=d["snapshot-id"],
                 timestamp_ms=d["timestamp-ms"],
@@ -939,7 +941,10 @@ class TableMetadata:
         )
 
     def snapshot_by_id(self, snapshot_id: int) -> Snapshot:
-        return next(s for s in self.snapshots if s.snapshot_id == snapshot_id)
+        for s in self.snapshots:
+            if s.snapshot_id == snapshot_id:
+                return s
+        raise ValueError(f"no such snapshot: {snapshot_id}")
 
     def snapshot_as_of(self, timestamp_ms: int) -> Snapshot | None:
         """Latest snapshot committed at or before ``timestamp_ms`` (the

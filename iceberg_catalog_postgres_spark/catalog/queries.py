@@ -59,7 +59,7 @@ def catalog_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _fresh(name: str) -> PostgresCatalog:
+def _fresh_catalog(name: str) -> PostgresCatalog:
     work = os.path.join(_REPO_ROOT, ".tmp", name)
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work, exist_ok=True)
@@ -99,7 +99,7 @@ def catalog_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import iceberg_catalog_postgres_spark.catalog.table as _tm
 
-    cat = _fresh("catalog_time_travel")
+    cat = _fresh_catalog("catalog_time_travel")
     src = load(spark, sf_dir, "nation")
     ident = TableIdentifier.parse("tt.nation")
     table = cat.create_table(ident, src.schema)
@@ -152,7 +152,7 @@ def catalog_snapshot_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import iceberg_catalog_postgres_spark.catalog.table as _tm
 
-    cat = _fresh("catalog_snapshot_history")
+    cat = _fresh_catalog("catalog_snapshot_history")
     src = load(spark, sf_dir, "nation")
     ident = TableIdentifier.parse("meta.nation")
     table = cat.create_table(ident, src.schema)
@@ -200,7 +200,7 @@ def catalog_schema_rename_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.types import StructField, StructType
 
-    cat = _fresh("catalog_schema_rename")
+    cat = _fresh_catalog("catalog_schema_rename")
     src = load(spark, sf_dir, "nation")
     ident = TableIdentifier.parse("rn.nation")
     t = cat.create_table(ident, src.schema)
@@ -251,7 +251,7 @@ def catalog_tag_reproducible_read(spark: SparkSession, sf_dir: str) -> DataFrame
     O(1) regardless of table size; reproducible-corpus guarantees cost no
     data copies.
     """
-    cat = _fresh("catalog_tags")
+    cat = _fresh_catalog("catalog_tags")
     src = load(spark, sf_dir, "nation")
     ident = TableIdentifier.parse("refs.nation")
     t = cat.create_table(ident, src.schema)
@@ -298,7 +298,7 @@ def catalog_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     checks need; publish is one CAS metadata swap — no copy, no rewrite, and
     a failed audit is just drop_ref (the staged snapshot expires later).
     """
-    cat = _fresh("catalog_wap")
+    cat = _fresh_catalog("catalog_wap")
     src = load(spark, sf_dir, "nation")
     ident = TableIdentifier.parse("wap.nation")
     t = cat.create_table(ident, src.schema)
@@ -359,7 +359,7 @@ def catalog_rollback_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     v2 still works) and are reclaimed later by snapshot expiry, never by the
     rollback itself.
     """
-    cat = _fresh("catalog_rollback_snapshot")
+    cat = _fresh_catalog("catalog_rollback_snapshot")
     src = load(spark, sf_dir, "nation")
     ident = TableIdentifier.parse("rb.nation")
     table = cat.create_table(ident, src.schema)
@@ -410,7 +410,6 @@ def catalog_changelog_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     two full snapshots; delete reconstruction scans only the parent
     cohorts the delete keys can touch, broadcast-side keys.
     """
-    from iceberg_catalog_postgres_spark.catalog.maintenance import _fresh_catalog
 
     cat = _fresh_catalog("catalog_changelog_demo")
     src = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
@@ -460,7 +459,7 @@ def catalog_changelog_multifile_delete(spark: SparkSession, sf_dir: str) -> Data
     stream quadratically with writer count. CDC surface derives from the
     snapshot model of the reference (mod.rs:296-347).
     """
-    cat = _fresh("catalog_changelog_multifile")
+    cat = _fresh_catalog("catalog_changelog_multifile")
     src = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     ident = TableIdentifier.parse("cdc.nation_multifile")
     table = cat.create_table(ident, src.schema)
@@ -524,7 +523,6 @@ def catalog_time_travel_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import time as _time
 
-    from iceberg_catalog_postgres_spark.catalog.maintenance import _fresh_catalog
 
     cat = _fresh_catalog("catalog_asof_demo")
     src = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
@@ -583,7 +581,6 @@ def catalog_cross_register(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-describing and immutable, which is the entire point of
     pointer-based catalogs.
     """
-    from iceberg_catalog_postgres_spark.catalog.maintenance import _fresh_catalog
 
     cat_a = _fresh_catalog("catalog_share_a")
     cat_b = _fresh_catalog("catalog_share_b")
@@ -648,7 +645,6 @@ def catalog_conflict_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     recompute-and-retry loop.
     """
     from iceberg_catalog_postgres_spark.catalog.catalog import CommitConflictError
-    from iceberg_catalog_postgres_spark.catalog.maintenance import _fresh_catalog
 
     cat = _fresh_catalog("catalog_conflict_demo")
     src = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
@@ -721,7 +717,6 @@ def catalog_commit_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     the metadata JSON. Lineage certified over append -> append -> MOR
     delete.
     """
-    from iceberg_catalog_postgres_spark.catalog.maintenance import _fresh_catalog
 
     cat = _fresh_catalog("catalog_metrics_demo")
     src = load(spark, sf_dir, "nation")
@@ -788,7 +783,6 @@ def catalog_metadata_log_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     GET of an O(snapshots) JSON."""
     import json as _json
 
-    from iceberg_catalog_postgres_spark.catalog.maintenance import _fresh_catalog
     from iceberg_catalog_postgres_spark.catalog.metadata import TableMetadata
 
     cat = _fresh_catalog("catalog_mdlog_demo")
@@ -855,7 +849,6 @@ def catalog_tz_aware_day_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     layouts only work if the driver-side transform is offset-invariant."""
     import datetime as _dt
 
-    from iceberg_catalog_postgres_spark.catalog.maintenance import _fresh_catalog
 
     cat = _fresh_catalog("catalog_tzday_demo")
     src = load(spark, sf_dir, "events").select("event_id", "user_id", "ts")
@@ -1063,7 +1056,6 @@ def catalog_spec_evolution_read_safety(spark: SparkSession, sf_dir: str) -> Data
     history keeps working; losing old-cohort rows from filtered reads is
     the worst possible failure of that contract — now driver-gated.
     """
-    from iceberg_catalog_postgres_spark.catalog.maintenance import _fresh_catalog
 
     cat = _fresh_catalog("catalog_specevo_read")
     src = load(spark, sf_dir, "nation").select(
@@ -1130,7 +1122,6 @@ def catalog_composed_multi_entry_pruning(spark: SparkSession, sf_dir: str) -> Da
     from metadata in one pass instead of two."""
     import datetime as _dt
 
-    from iceberg_catalog_postgres_spark.catalog.maintenance import _fresh_catalog
 
     cat = _fresh_catalog("catalog_composed_prune")
     src = load(spark, sf_dir, "events").select("event_id", "user_id", "ts")
@@ -1208,7 +1199,6 @@ def catalog_spec_history_document(spark: SparkSession, sf_dir: str) -> DataFrame
     is how mixed-spec tables rot."""
     import json as _json
 
-    from iceberg_catalog_postgres_spark.catalog.maintenance import _fresh_catalog
 
     cat = _fresh_catalog("catalog_spec_history")
     src = load(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey", "n_name")
@@ -1297,7 +1287,7 @@ def catalog_partition_statistics(spark: SparkSession, sf_dir: str) -> DataFrame:
         update_partition_statistics,
     )
 
-    cat = _fresh("catalog_partition_statistics")
+    cat = _fresh_catalog("catalog_partition_statistics")
     src = load(spark, sf_dir, "nation").select(
         "n_nationkey", "n_regionkey", "n_name"
     )
@@ -1352,7 +1342,7 @@ def catalog_partition_statistics_eqdelete(spark: SparkSession, sf_dir: str) -> D
         update_partition_statistics,
     )
 
-    cat = _fresh("catalog_pstats_eq")
+    cat = _fresh_catalog("catalog_pstats_eq")
     src = load(spark, sf_dir, "nation").select(
         "n_nationkey", "n_regionkey", "n_name"
     )
@@ -1409,7 +1399,6 @@ def catalog_bloom_filter_point_lookup(spark: SparkSession, sf_dir: str) -> DataF
     lookup skips the 99.99% of row groups whose bloom (or dictionary)
     says definitely-absent, with no sort or clustering requirement —
     the point-lookup complement to min/max bounds over unsorted data."""
-    from iceberg_catalog_postgres_spark.catalog.maintenance import _fresh_catalog
 
     cat = _fresh_catalog("catalog_bloom_lookup")
     src = load(spark, sf_dir, "orders").select(
@@ -1490,7 +1479,7 @@ def catalog_hash_distribution_write(spark: SparkSession, sf_dir: str) -> DataFra
     Scale: the small-files control for wide appends — 1000 tasks x 365
     day-partitions is 365k files task-local and 365 under hash; the cost
     is one shuffle of the appended data (never the table)."""
-    cat = _fresh("catalog_hash_distribution")
+    cat = _fresh_catalog("catalog_hash_distribution")
     src = load(spark, sf_dir, "nation").repartition(8)
     ident_n = TableIdentifier.parse("dist.none")
     t_none = cat.create_table(ident_n, src.schema, partition_by=["n_regionkey"])
@@ -1677,7 +1666,7 @@ def catalog_bucket_copartitioned_join(spark: SparkSession, sf_dir: str) -> DataF
     carries exactly ONE Exchange — the 8-row metadata frame — and NO
     SortMergeJoin/ShuffledHashJoin/BroadcastHashJoin operator: the
     100 TB path's property that table data never crosses a shuffle."""
-    cat = _fresh("catalog_spj")
+    cat = _fresh_catalog("catalog_spj")
     o_src = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )

@@ -1463,6 +1463,38 @@ class Table:
             df = df.unionByName(p)
         return df
 
+    def _snapshot(self, snapshot_id: int | None):
+        """The snapshot ``snapshot_id`` names (ValueError if there is none),
+        or the current one when it is None (None on an empty table)."""
+        if snapshot_id is None:
+            return self.metadata.current_snapshot()
+        return self.metadata.snapshot_by_id(snapshot_id)
+
+    def _data_entries(self, snap, chunk_skip=None):
+        """Yield ``(rel, seq, partition, stats)`` for every data entry of
+        ``snap`` — the one manifest walk every scan planner shares.
+
+        On a manifest-backed snapshot with summaries, a caller-supplied
+        ``chunk_skip(summary)`` makes this the Iceberg two-level walk: a
+        chunk for which it returns True is skipped without being fetched,
+        the others are loaded one by one. Without ``chunk_skip``, or on an
+        inline / legacy snapshot, the snapshot's per-file dicts are walked;
+        a chunked snapshot inflates them once and caches them."""
+        refs = snap.chunk_refs() if chunk_skip is not None else None
+        if refs is None:
+            seqs, parts, stats = snap.file_seqs, snap.file_partitions, snap.file_stats
+            for rel in snap.data_files:
+                yield rel, seqs.get(rel, 0), parts.get(rel), stats.get(rel)
+            return
+        store = self.catalog.object_store()
+        for c in refs:
+            s = c["summary"]
+            if s["counts"]["data"] == 0 or chunk_skip(s):
+                continue
+            for e in load_chunk(store, c["path"])["entries"]:
+                if e["kind"] == "data":
+                    yield e["path"], e.get("seq", 0), e.get("partition"), e.get("stats")
+
     def file_bounds(
         self, rel_path: str, column: str, snapshot_id: int | None = None
     ) -> tuple | None:
@@ -1472,11 +1504,7 @@ class Table:
         bound) — callers may then prune only on the lower side. Returns None
         when no bound exists anywhere (file must be treated as
         possibly-matching)."""
-        snap = (
-            self.metadata.snapshot_by_id(snapshot_id)
-            if snapshot_id is not None
-            else self.metadata.current_snapshot()
-        )
+        snap = self._snapshot(snapshot_id)
         if snap is None:
             return None
         phys = self.physical_name_or_absent(column, snap.file_seqs.get(rel_path, 0))
@@ -1515,96 +1543,54 @@ class Table:
         can certify the pure-metadata path; ``footer_fallback=False`` KEEPS
         statless files without opening them (pure-metadata superset — the
         SQL planner's mode, where planning must never do O(files) I/O).
-        Either bound may be None for a HALF-OPEN interval (r15)."""
-        snap = (
-            self.metadata.snapshot_by_id(snapshot_id)
-            if snapshot_id is not None
-            else self.metadata.current_snapshot()
-        )
+        Either bound may be None for a HALF-OPEN interval (r15).
+
+        Two-level: a manifest chunk whose SUMMARY bounds cover every data
+        entry and are provably disjoint from [lo, hi] is never fetched, so
+        planning costs O(matching chunks). The chunk test is used only while
+        the rename log is empty — the summary is keyed by physical names,
+        which then equal the logical ones; a renamed table walks the
+        per-file dicts and resolves the physical name per file seq."""
+        snap = self._snapshot(snapshot_id)
         if snap is None:
             return []
         store = self.catalog.object_store()
-        refs = snap.chunk_refs()
-        if refs is not None and not self.column_renames():
-            # Two-level prune (Iceberg manifest-list model): a chunk whose
-            # SUMMARY bounds cover every data entry and are provably
-            # disjoint from [lo, hi] is skipped without being fetched —
-            # planning cost is O(matching chunks), not O(all files). Gated
-            # on an empty rename log so the summary's physical column names
-            # are exactly the logical ones; renamed tables fall through to
-            # the per-entry path below, which resolves names per file seq.
-            out = []
-            for c in refs:
-                s = c["summary"]
-                nd = s["counts"]["data"]
-                if nd == 0:
-                    continue
-                cb = s["bounds"].get(column)
-                if cb is not None and cb["n"] == nd:
-                    c_lo = decode_bound(cb["lo"])
-                    c_hi = None if cb["hi"] is None else decode_bound(cb["hi"])
-                    # float summary bounds skip the chunk only when the
-                    # summary proves EVERY covered entry NaN-free (r16);
-                    # pre-r16 summaries lack "nan0" and fall through to
-                    # the per-entry nan_counts guard below
-                    float_ok = (
-                        not (isinstance(c_lo, float) or isinstance(c_hi, float))
-                        or cb.get("nan0") == nd
-                    )
-                    if float_ok and (
-                        (lo is not None and c_hi is not None and c_hi < lo)
-                        or (hi is not None and c_lo is not None and c_lo > hi)
-                    ):
-                        continue  # whole chunk disjoint — never fetched
-                doc = load_chunk(store, c["path"])
-                for e in doc["entries"]:
-                    if e["kind"] != "data":
-                        continue
-                    rel = e["path"]
-                    b = ((e.get("stats") or {}).get("bounds") or {}).get(column)
-                    if b is not None:
-                        f_lo = decode_bound(b[0])
-                        f_hi = None if b[1] is None else decode_bound(b[1])
-                        if self._bounds_prune_ok(
-                            e.get("stats"), column, f_lo, f_hi
-                        ) and (
-                            (lo is not None and f_hi is not None and f_hi < lo)
-                            or (hi is not None and f_lo is not None and f_lo > hi)
-                        ):
-                            continue
-                        out.append(store.resolve(rel))
-                        continue
-                    if require_stats:
-                        raise ValueError(
-                            f"no manifest bounds for column {column!r} on {rel}"
-                        )
-                    if not footer_fallback:
-                        out.append(store.resolve(rel))  # statless: keep, no I/O
-                        continue
-                    stats = _file_range_stats(store.resolve(rel), column)
-                    if stats is None or not (
-                        (lo is not None and stats[1] < lo)
-                        or (hi is not None and stats[0] > hi)
-                    ):
-                        out.append(store.resolve(rel))
-            return out
+
+        def disjoint(f_lo, f_hi) -> bool:
+            return (lo is not None and f_hi is not None and f_hi < lo) or (
+                hi is not None and f_lo is not None and f_lo > hi
+            )
+
+        def chunk_skip(s) -> bool:
+            nd = s["counts"]["data"]
+            cb = s["bounds"].get(column)
+            if cb is None or cb["n"] != nd:
+                return False
+            c_lo = decode_bound(cb["lo"])
+            c_hi = None if cb["hi"] is None else decode_bound(cb["hi"])
+            # float summary bounds skip the chunk only when the summary
+            # proves EVERY covered entry NaN-free (r16); pre-r16 summaries
+            # lack "nan0" and leave it to the per-entry nan_counts guard
+            float_ok = (
+                not (isinstance(c_lo, float) or isinstance(c_hi, float))
+                or cb.get("nan0") == nd
+            )
+            return float_ok and disjoint(c_lo, c_hi)
+
         out = []
-        for rel in snap.data_files:
-            phys = self.physical_name_or_absent(column, snap.file_seqs.get(rel, 0))
+        for rel, seq, _tup, st in self._data_entries(
+            snap, None if self.column_renames() else chunk_skip
+        ):
+            phys = self.physical_name_or_absent(column, seq)
             if phys is None:
                 # recycled name: the column is all-NULL in this cohort, and
                 # NULL never satisfies a range predicate — prune exactly
                 continue
-            b = ((snap.file_stats.get(rel) or {}).get("bounds") or {}).get(phys)
+            b = ((st or {}).get("bounds") or {}).get(phys)
             if b is not None:
                 f_lo = decode_bound(b[0])
                 f_hi = None if b[1] is None else decode_bound(b[1])
-                if self._bounds_prune_ok(
-                    snap.file_stats.get(rel), phys, f_lo, f_hi
-                ) and (
-                    (lo is not None and f_hi is not None and f_hi < lo)
-                    or (hi is not None and f_lo is not None and f_lo > hi)
-                ):
+                if self._bounds_prune_ok(st, phys, f_lo, f_hi) and disjoint(f_lo, f_hi):
                     continue  # provably disjoint, pruned from metadata alone
                 out.append(store.resolve(rel))
                 continue
@@ -1614,10 +1600,7 @@ class Table:
                 out.append(store.resolve(rel))  # statless: keep, no I/O
                 continue
             stats = _file_range_stats(store.resolve(rel), phys)
-            if stats is None or not (
-                (lo is not None and stats[1] < lo)
-                or (hi is not None and stats[0] > hi)
-            ):
+            if stats is None or not disjoint(*stats):
                 out.append(store.resolve(rel))
         return out
 
@@ -1631,62 +1614,38 @@ class Table:
         ``null_count == 0`` is pruned. Files without a recorded null count
         are kept (superset-safe). At 100 TB this is what makes
         completeness-style DQ scans (``WHERE col IS NOT NULL``) skip the
-        legacy files written before a column was backfilled."""
-        snap = (
-            self.metadata.snapshot_by_id(snapshot_id)
-            if snapshot_id is not None
-            else self.metadata.current_snapshot()
-        )
+        legacy files written before a column was backfilled. A chunk whose
+        summary proves every data entry no-null (for IS NULL) or all-null
+        (for IS NOT NULL) is never fetched — under the same empty-rename-log
+        gate as ``planned_files``."""
+        snap = self._snapshot(snapshot_id)
         if snap is None:
             return []
         store = self.catalog.object_store()
-        refs = snap.chunk_refs()
-        if refs is not None and not self.column_renames():
-            # two-level nullness prune: a chunk whose summary proves every
-            # covered data entry is uniformly no-null (for IS NULL) or
-            # all-null (for IS NOT NULL) is skipped without being fetched
-            out = []
-            for c in refs:
-                s = c["summary"]
-                nd = s["counts"]["data"]
-                if nd == 0:
-                    continue
-                nn = (s.get("nullness") or {}).get(column)
-                if nn is not None and nn["n"] == nd:
-                    if want_null and nn["no_null"] == nd:
-                        continue
-                    if not want_null and nn["all_null"] == nd:
-                        continue
-                for e in load_chunk(store, c["path"])["entries"]:
-                    if e["kind"] != "data":
-                        continue
-                    st = e.get("stats") or {}
-                    nc = (st.get("null_counts") or {}).get(column)
-                    rc = st.get("record_count")
-                    if nc is not None:
-                        if want_null and nc == 0:
-                            continue
-                        if not want_null and rc is not None and nc == rc:
-                            continue
-                    out.append(store.resolve(e["path"]))
-            return out
+
+        def chunk_skip(s) -> bool:
+            nd = s["counts"]["data"]
+            nn = (s.get("nullness") or {}).get(column)
+            if nn is None or nn["n"] != nd:
+                return False
+            return nn["no_null" if want_null else "all_null"] == nd
+
         out = []
-        for rel in snap.data_files:
-            st = snap.file_stats.get(rel) or {}
-            phys = self.physical_name_or_absent(column, snap.file_seqs.get(rel, 0))
+        for rel, seq, _tup, st in self._data_entries(
+            snap, None if self.column_renames() else chunk_skip
+        ):
+            phys = self.physical_name_or_absent(column, seq)
             if phys is None:
                 # recycled name: column is all-NULL in this cohort — exact
-                if not want_null:
-                    continue
-                out.append(store.resolve(rel))
+                if want_null:
+                    out.append(store.resolve(rel))
                 continue
+            st = st or {}
             nc = (st.get("null_counts") or {}).get(phys)
-            rc = st.get("record_count")
-            if nc is not None:
-                if want_null and nc == 0:
-                    continue  # no nulls in this file: IS NULL matches nothing
-                if not want_null and rc is not None and nc == rc:
-                    continue  # all rows null: IS NOT NULL matches nothing
+            # no nulls: IS NULL matches nothing; all rows null: IS NOT NULL
+            # matches nothing
+            if nc is not None and nc == (0 if want_null else st.get("record_count")):
+                continue
             out.append(store.resolve(rel))
         return out
 
@@ -1707,11 +1666,7 @@ class Table:
         the data files; it does not net out merge-on-read deletes (use
         ``kind="eq-delete"``/``"pos-delete"`` to see the pending delete
         volume)."""
-        snap = (
-            self.metadata.snapshot_by_id(snapshot_id)
-            if snapshot_id is not None
-            else self.metadata.current_snapshot()
-        )
+        snap = self._snapshot(snapshot_id)
         if snap is None:
             return 0
         if kind == "dv":
@@ -1751,11 +1706,7 @@ class Table:
         stats next, one ``getsize`` per statless legacy file last). This is
         what byte-based compaction targets and storage billing read; at
         10^7 files the answer never touches a listing."""
-        snap = (
-            self.metadata.snapshot_by_id(snapshot_id)
-            if snapshot_id is not None
-            else self.metadata.current_snapshot()
-        )
+        snap = self._snapshot(snapshot_id)
         if snap is None:
             return 0
         if kind == "dv":
@@ -1891,6 +1842,79 @@ class Table:
                 return True, tup[s]
         return False, None
 
+    def _planned_by_tuple(self, snap, eq_vals: dict, bounds: dict) -> list[str]:
+        """Data files of ``snap`` whose recorded partition tuple may satisfy
+        every constraint — the tuple walk behind ``planned_files_partition``
+        and ``planned_files_composed``. ``eq_vals`` maps a spec entry to
+        its allowed (string) tuple values; ``bounds`` maps a MONOTONE entry
+        to an integer interval ``(a, b)``, either side None = unbounded.
+
+        A file without a recorded tuple, or whose tuple lacks the entry
+        (written under a different spec — partition evolution, r7), is
+        kept: superset-safe. Tuple keys written before a source-column
+        rename match through the entry's historical spellings. Two-level: a
+        chunk whose partition summary covers every data entry and holds no
+        allowed value (or no value inside the interval) for ANY constrained
+        entry is never fetched. That chunk test applies only to labels the
+        rename log never touched — a renamed or recycled label's summary can
+        mix owners (r8), and the per-entry seq-aware match still prunes
+        those exactly. With no constraint at all every data file is kept."""
+        spells = {e: self.partition_entry_spellings(e) for e in (*bounds, *eq_vals)}
+        excludable = self._entries_chunk_excludable(spells)
+
+        def outside(values, a, b) -> bool:
+            try:
+                return all(not _in_bounds(int(v), a, b) for v in values)
+            except (TypeError, ValueError):
+                return False  # a non-integer value: cannot exclude
+
+        def chunk_skip(s) -> bool:
+            nd = s["counts"]["data"]
+            parts = s.get("partitions", {})
+            for entry in excludable:
+                # a chunk is excludable only when ONE spelling's summary
+                # covers every data entry (a chunk mixing spellings has
+                # per-spelling n < nd)
+                for sp in spells[entry]:
+                    p = parts.get(sp)
+                    if p is None or p["n"] != nd:
+                        continue
+                    if entry in eq_vals and not any(
+                        x in p["values"] for x in eq_vals[entry]
+                    ):
+                        return True
+                    if entry in bounds and outside(p["values"], *bounds[entry]):
+                        return True
+            return False
+
+        def tuple_ok(tup, seq) -> bool:
+            if tup is None:
+                return True
+            for entry, allowed in eq_vals.items():
+                present, v = self._tuple_value(tup, entry, spells, file_seq=seq)
+                if present and v not in allowed:
+                    return False
+            for entry, (a, b) in bounds.items():
+                present, v = self._tuple_value(tup, entry, spells, file_seq=seq)
+                if not present or v is None:
+                    continue
+                try:
+                    iv = int(v)
+                except (TypeError, ValueError):
+                    continue
+                if not _in_bounds(iv, a, b):
+                    return False
+            return True
+
+        store = self.catalog.object_store()
+        return [
+            store.resolve(rel)
+            for rel, seq, tup, _st in self._data_entries(
+                snap, chunk_skip if spells else None
+            )
+            if tuple_ok(tup, seq)
+        ]
+
     def planned_files_partition(
         self, filters: dict, snapshot_id: int | None = None
     ) -> list[str]:
@@ -1902,112 +1926,18 @@ class Table:
         line of defense at 100 TB. Files without a recorded tuple are kept
         (superset-safe). Tuple keys written before a source-column rename
         match via the entry's historical spellings (r7)."""
-        snap = (
-            self.metadata.snapshot_by_id(snapshot_id)
-            if snapshot_id is not None
-            else self.metadata.current_snapshot()
-        )
+        snap = self._snapshot(snapshot_id)
         if snap is None:
             return []
-        store = self.catalog.object_store()
-        spells = {col: self.partition_entry_spellings(col) for col in filters}
-
-        def tup_matches(tup, svals, seq) -> bool:
-            for col, sv in svals.items():
-                present, v = self._tuple_value(tup, col, spells, file_seq=seq)
-                if not present:
-                    # tuple recorded under a DIFFERENT spec (partition
-                    # evolution): the file may still contain matching rows —
-                    # keep it (superset-safe; r7: excluding here silently
-                    # dropped old-spec rows from partition-filtered reads)
-                    continue
-                if v != sv:
-                    return False
-            return True
-
-        refs = snap.chunk_refs()
-        if refs is not None:
-            # Two-level partition prune: a chunk whose summary's distinct
-            # partition values cover every data entry and exclude the
-            # filter value is skipped without being fetched.
-            svals = {col: (None if v is None else str(v)) for col, v in filters.items()}
-            excludable = self._entries_chunk_excludable(svals)  # r8
-            out = []
-            for c in refs:
-                s = c["summary"]
-                nd = s["counts"]["data"]
-                if nd == 0:
-                    continue
-                parts = s.get("partitions", {})
-                skip = False
-                for col, sv in svals.items():
-                    if col not in excludable:
-                        continue
-                    # a chunk is excludable only when ONE spelling's summary
-                    # covers every data entry and excludes the value (a
-                    # chunk mixing spellings has per-spelling n < nd)
-                    for sp in spells[col]:
-                        p = parts.get(sp)
-                        if p is not None and p["n"] == nd and sv not in p["values"]:
-                            skip = True
-                            break
-                    if skip:
-                        break
-                if skip:
-                    continue  # whole chunk excluded — never fetched
-                for e in load_chunk(store, c["path"])["entries"]:
-                    if e["kind"] != "data":
-                        continue
-                    tup = e.get("partition")
-                    if tup is None or tup_matches(tup, svals, e.get("seq", 0)):
-                        out.append(store.resolve(e["path"]))
-            return out
-        svals = {col: (None if v is None else str(v)) for col, v in filters.items()}
-        out = []
-        for f in snap.data_files:
-            tup = snap.file_partitions.get(f)
-            if tup is None or tup_matches(tup, svals, snap.file_seqs.get(f, 0)):
-                out.append(store.resolve(f))
-        return out
+        eq_vals = {col: {None if v is None else str(v)} for col, v in filters.items()}
+        return self._planned_by_tuple(snap, eq_vals, {})
 
     def planned_files_transformed(
         self, filters: dict, snapshot_id: int | None = None
     ) -> list[str]:
-        """Transform-aware partition pruning: ``filters`` maps SOURCE column
-        -> query value; each spec entry over a filtered column is applied
-        DRIVER-SIDE (``transform_value`` — murmur3-32 bucket per the Iceberg
-        spec, or legacy CRC-32 when the table's ``write.bucket-hash``
-        property says so; truncate prefix/floor; pure Python, no Spark job)
-        and the resulting tuple values prune via
-        ``planned_files_partition``. This is how a point lookup on a
-        ``bucket(N, key)``-partitioned 100 TB table plans 1/N of the files
-        from the metadata dictionary alone. The query value is coerced to
-        the SOURCE column's schema type before hashing (an int column
-        filtered with "34" still plans the right bucket — the r5 ADVICE
-        canonicalization trap). Identity specs degrade to the plain path,
-        so callers can always use this entry point."""
-        spec = self.metadata.partition_spec
-        bucket_hash = _bucket_hash_of(self.metadata)
-        src_types = {f.name: f.dataType.simpleString() for f in self.schema.fields}
-        tuple_filters = {}
-        for entry in spec:
-            col = parse_partition_field(entry)[2]
-            if col in filters and not isinstance(
-                filters[col], NullnessConstraint
-            ):
-                tuple_filters[entry] = transform_value(
-                    entry, filters[col], bucket_hash=bucket_hash,
-                    src_type=src_types.get(col),
-                )
-        if not tuple_filters:
-            # no spec entry covers the filtered columns: every file might match
-            store = self.catalog.object_store()
-            return [store.resolve(f) for f in self.metadata.current_data_files()] \
-                if snapshot_id is None else [
-                    self.catalog.object_store().resolve(f)
-                    for f in self.metadata.snapshot_by_id(snapshot_id).data_files
-                ]
-        return self.planned_files_partition(tuple_filters, snapshot_id=snapshot_id)
+        """Transform-aware point pruning: ``filters`` maps SOURCE column ->
+        query value, planned as ``planned_files_composed(points=filters)``."""
+        return self.planned_files_composed(points=filters, snapshot_id=snapshot_id)
 
     def planned_files_composed(
         self,
@@ -2031,29 +1961,24 @@ class Table:
         prunes from the lower bound alone; a monotone transform preserves
         order, so T(lo) bounds the transformed values exactly).
         ``points``: {source col: value | [values]} — applied through EVERY
-        entry over that column via the driver-side transform (bucket
-        murmur3 included), exactly ``planned_files_transformed``'s
-        mapping. A LIST of values (r13 — SQL ``IN`` predicates) plans as
-        set membership in the SAME single walk: a file survives when its
-        tuple matches ANY of the values, a chunk is excluded when its
-        summary covers every entry and intersects none of them.
+        entry over that column via the driver-side transform
+        (``transform_value`` — murmur3-32 bucket per the Iceberg spec, or
+        legacy CRC-32 when the table's ``write.bucket-hash`` property says
+        so; truncate prefix/floor; pure Python, no Spark job). The query
+        value is coerced to the SOURCE column's schema type before hashing
+        (an int column filtered with "34" still plans the right bucket — the
+        r5 ADVICE canonicalization trap). A LIST of values (r13 — SQL ``IN``
+        predicates) plans as set membership in the SAME single walk: a file
+        survives when its tuple matches ANY of the values.
 
-        Two-level: a manifest chunk whose partition summary covers every
-        data entry and excludes the point value (or contains no value
-        inside the range) for ANY constrained entry is skipped without
-        being fetched. Files without a recorded tuple, or whose tuple was
-        written under a different spec (partition evolution), are kept —
-        superset-safe, matching the single-predicate planners."""
-        snap = (
-            self.metadata.snapshot_by_id(snapshot_id)
-            if snapshot_id is not None
-            else self.metadata.current_snapshot()
-        )
+        The walk and its two-level chunk exclusion are
+        ``_planned_by_tuple``'s; with no constrained entry it returns every
+        data file of the snapshot."""
+        snap = self._snapshot(snapshot_id)
         if snap is None:
             return []
         ranges = ranges or {}
         points = points or {}
-        store = self.catalog.object_store()
         src_types = {f.name: f.dataType.simpleString() for f in self.schema.fields}
         bucket_hash = _bucket_hash_of(self.metadata)
         bounds: dict[str, tuple[int, int]] = {}
@@ -2091,196 +2016,17 @@ class Table:
                 if a is None and b is None:
                     continue
                 bounds[entry] = (a, b)
-        if not bounds and not eq_vals:
-            return [store.resolve(f) for f in snap.data_files]
-        spells = {
-            e: self.partition_entry_spellings(e) for e in (*bounds, *eq_vals)
-        }
-
-        def tuple_ok(tup, seq) -> bool:
-            if tup is None:
-                return True
-            for entry, allowed in eq_vals.items():
-                present, v = self._tuple_value(tup, entry, spells, file_seq=seq)
-                if present and v not in allowed:
-                    return False
-            for entry, (a, b) in bounds.items():
-                present, v = self._tuple_value(tup, entry, spells, file_seq=seq)
-                if not present or v is None:
-                    continue
-                try:
-                    iv = int(v)
-                except (TypeError, ValueError):
-                    continue
-                if not _in_bounds(iv, a, b):
-                    return False
-            return True
-
-        refs = snap.chunk_refs()
-        if refs is None:
-            return [
-                store.resolve(f)
-                for f in snap.data_files
-                if tuple_ok(snap.file_partitions.get(f), snap.file_seqs.get(f, 0))
-            ]
-        # chunk-level exclusion only for labels untouched by renames — a
-        # renamed/recycled label's summary can mix owners (r8); per-entry
-        # seq-aware matching below still prunes exactly
-        excludable = self._entries_chunk_excludable(spells)
-        out = []
-        for c in refs:
-            s = c["summary"]
-            nd = s["counts"]["data"]
-            if nd == 0:
-                continue
-            parts = s.get("partitions", {})
-            skip = False
-            for entry in spells:
-                if entry not in excludable:
-                    continue
-                for sp in spells[entry]:
-                    p = parts.get(sp)
-                    if p is None or p["n"] != nd:
-                        continue
-                    if entry in eq_vals and not any(
-                        x in p["values"] for x in eq_vals[entry]
-                    ):
-                        skip = True
-                        break
-                    if entry in bounds:
-                        a, b = bounds[entry]
-                        vals = []
-                        for v in p["values"]:
-                            try:
-                                vals.append(int(v))
-                            except (TypeError, ValueError):
-                                vals = None
-                                break
-                        if vals is not None and all(
-                            not _in_bounds(iv, a, b) for iv in vals
-                        ):
-                            skip = True
-                            break
-                if skip:
-                    break
-            if skip:
-                continue  # whole chunk excluded — never fetched
-            for e in load_chunk(store, c["path"])["entries"]:
-                if e["kind"] != "data":
-                    continue
-                if tuple_ok(e.get("partition"), e.get("seq", 0)):
-                    out.append(store.resolve(e["path"]))
-        return out
+        return self._planned_by_tuple(snap, eq_vals, bounds)
 
     def planned_files_transformed_range(
         self, col: str, lo, hi, snapshot_id: int | None = None
     ) -> list[str]:
-        """RANGE pruning over a MONOTONE partition transform — the dominant
-        access pattern on temporal layouts ("ts BETWEEN a AND b" on a
-        day(ts)-partitioned table plans only the touched days). The query
-        bounds map driver-side to transformed bounds [T(lo), T(hi)]
-        (year/month/day/hour and integer truncate are monotone, so value
-        containment is exact; identity over ints degrades to the same
-        compare; bucket is NOT monotone and is skipped), and files prune by
-        integer comparison of their recorded tuple values — metadata only,
-        zero footers. Two-level: a manifest chunk whose partition summary
-        covers every data entry and contains no value inside the range is
-        skipped without being fetched. Files without a recorded tuple (or
-        under a non-monotone-only spec) are kept — superset-safe."""
-        snap = (
-            self.metadata.snapshot_by_id(snapshot_id)
-            if snapshot_id is not None
-            else self.metadata.current_snapshot()
+        """RANGE pruning over a MONOTONE partition transform ("ts BETWEEN a
+        AND b" on a day(ts)-partitioned table plans only the touched days),
+        planned as ``planned_files_composed(ranges={col: (lo, hi)})``."""
+        return self.planned_files_composed(
+            ranges={col: (lo, hi)}, snapshot_id=snapshot_id
         )
-        if snap is None:
-            return []
-        store = self.catalog.object_store()
-        src_types = {f.name: f.dataType.simpleString() for f in self.schema.fields}
-        bounds: dict[str, tuple[int, int]] = {}
-        for entry in self.metadata.partition_spec:
-            kind, _param, src = parse_partition_field(entry)
-            if src != col or kind == "bucket" or (
-                kind == "truncate" and src_types.get(src) == "string"
-            ):
-                continue  # non-monotone (bucket) / lexicographic (str truncate)
-            try:
-                a = None if lo is None else int(
-                    transform_value(entry, lo, src_type=src_types.get(src))
-                )
-                b = None if hi is None else int(
-                    transform_value(entry, hi, src_type=src_types.get(src))
-                )
-            except (TypeError, ValueError):
-                # e.g. identity over a string source: transformed bounds are
-                # not integers — drop the entry (superset-safe fallback),
-                # matching the point planner's tolerance of this spec shape
-                continue
-            if a is None and b is None:
-                continue  # unbounded both sides: nothing to prune on
-            bounds[entry] = (a, b)
-        if not bounds:
-            return [store.resolve(f) for f in snap.data_files]
-        spells = {e: self.partition_entry_spellings(e) for e in bounds}
-
-        def tuple_ok(tup, seq) -> bool:
-            if tup is None:
-                return True
-            for entry, (a, b) in bounds.items():
-                present, v = self._tuple_value(tup, entry, spells, file_seq=seq)
-                if not present or v is None:
-                    continue
-                try:
-                    iv = int(v)
-                except (TypeError, ValueError):
-                    continue
-                if not _in_bounds(iv, a, b):
-                    return False
-            return True
-
-        refs = snap.chunk_refs()
-        if refs is None:
-            return [
-                store.resolve(f)
-                for f in snap.data_files
-                if tuple_ok(snap.file_partitions.get(f), snap.file_seqs.get(f, 0))
-            ]
-        excludable = self._entries_chunk_excludable(spells)  # r8: see above
-        out = []
-        for c in refs:
-            s = c["summary"]
-            nd = s["counts"]["data"]
-            if nd == 0:
-                continue
-            parts = s.get("partitions", {})
-            skip = False
-            for entry, (a, b) in bounds.items():
-                if entry not in excludable:
-                    continue
-                for sp in spells[entry]:
-                    p = parts.get(sp)
-                    if p is not None and p["n"] == nd:
-                        vals = []
-                        for v in p["values"]:
-                            try:
-                                vals.append(int(v))
-                            except (TypeError, ValueError):
-                                vals = None
-                                break
-                        if vals is not None and all(
-                            not _in_bounds(iv, a, b) for iv in vals
-                        ):
-                            skip = True
-                            break
-                if skip:
-                    break
-            if skip:
-                continue  # whole chunk excluded — never fetched
-            for e in load_chunk(store, c["path"])["entries"]:
-                if e["kind"] != "data":
-                    continue
-                if tuple_ok(e.get("partition"), e.get("seq", 0)):
-                    out.append(store.resolve(e["path"]))
-        return out
 
     def _commit_metadata_edit(self, edit_fn, label: str, max_retries: int = 5) -> "Table":
         """Commit a metadata-only edit (refs, partition spec, schema) via the
@@ -2651,11 +2397,7 @@ class Table:
             if snap_t is None:
                 return spark.createDataFrame([], self.schema)
             snapshot_id = snap_t.snapshot_id
-        snap = (
-            self.metadata.snapshot_by_id(snapshot_id)
-            if snapshot_id is not None
-            else self.metadata.current_snapshot()
-        )
+        snap = self._snapshot(snapshot_id)
         if prune is not None:
             files = self.planned_files(*prune, snapshot_id=snapshot_id)
         else:
@@ -2668,47 +2410,20 @@ class Table:
         if transformed_ranges is None and transformed_range is not None:
             _c, _lo, _hi = transformed_range
             transformed_ranges = {_c: (_lo, _hi)}
-        if transformed_filter is not None and transformed_ranges:
-            # BOTH predicate kinds: one composed planner walk of the
-            # manifest index instead of two intersected walks (at 10^7
-            # files the index walk IS the planning cost). r13:
-            # ``transformed_ranges`` carries ANY number of range columns
-            # (ts BETWEEN ... AND k BETWEEN ... on a (day(ts),
-            # truncate(k)) layout intersects in the same single walk).
+        if transformed_filter is not None or transformed_ranges:
+            # transform-aware point and range pruning ({source col: value}
+            # through bucket/truncate/temporal specs, {col: (lo, hi)} through
+            # the monotone ones) in ONE composed walk of the manifest index,
+            # INSIDE the reader so MOR deletes / renames / defaults still
+            # apply below
             comp = set(
                 self.planned_files_composed(
-                    ranges=dict(transformed_ranges),
+                    ranges=transformed_ranges,
                     points=transformed_filter,
                     snapshot_id=snapshot_id,
                 )
             )
             files = [f for f in files if f in comp]
-        elif transformed_ranges is not None and len(transformed_ranges) > 1:
-            comp = set(
-                self.planned_files_composed(
-                    ranges=dict(transformed_ranges), snapshot_id=snapshot_id
-                )
-            )
-            files = [f for f in files if f in comp]
-        elif transformed_filter is not None:
-            # transform-aware point pruning ({source col: value} mapped
-            # through bucket/truncate/temporal specs) composed INSIDE the
-            # reader, so MOR deletes / renames / defaults still apply below
-            tf = set(
-                self.planned_files_transformed(
-                    transformed_filter, snapshot_id=snapshot_id
-                )
-            )
-            files = [f for f in files if f in tf]
-        elif transformed_ranges:
-            # monotone-transform range pruning (single column), same contract
-            ((_c, (_lo, _hi)),) = transformed_ranges.items()
-            tr = set(
-                self.planned_files_transformed_range(
-                    _c, _lo, _hi, snapshot_id=snapshot_id
-                )
-            )
-            files = [f for f in files if f in tr]
         if file_subset is not None:
             # caller-chosen slice of the snapshot (table-relative paths) —
             # used by maintenance rewrites so the read still applies
@@ -3840,10 +3555,7 @@ class Transaction:
         snapshots cherry-pick cleanly; anything else needs a data-aware
         merge and raises."""
         md = self.table.metadata
-        try:
-            snap = md.snapshot_by_id(snapshot_id)
-        except StopIteration:
-            raise ValueError(f"no such snapshot: {snapshot_id}") from None
+        snap = md.snapshot_by_id(snapshot_id)
         if snap.operation != "append":
             raise ValueError(
                 f"only append snapshots cherry-pick (got {snap.operation})"

@@ -173,6 +173,26 @@ def test_snapshot_time_travel(catalog, spark):
     assert t2.to_df(spark, snapshot_id=snap1).count() == 1
 
 
+def test_unknown_snapshot_id_raises_value_error(catalog, spark):
+    """An unknown snapshot id is a ValueError everywhere. A bare
+    StopIteration from the lookup would end an enclosing ``map`` early and
+    silently shorten its result."""
+    t = catalog.create_table(TableIdentifier.parse("test.unknown_snap"), SCHEMA)
+    t = t.new_transaction().append_rows(spark, [("a", "x")], SCHEMA).commit()
+    cur = t.metadata.current_snapshot_id
+    bad = 123 if cur != 123 else 124
+    for call in (
+        lambda: t.planned_files("one", "a", "z", snapshot_id=bad),
+        lambda: t.planned_files_composed(points={"one": "a"}, snapshot_id=bad),
+        lambda: t.record_count(snapshot_id=bad),
+        lambda: t.to_df(spark, snapshot_id=bad),
+    ):
+        with pytest.raises(ValueError, match=f"no such snapshot: {bad}"):
+            call()
+    with pytest.raises(ValueError, match="no such snapshot"):
+        list(map(lambda s: t.planned_files("one", "a", "z", snapshot_id=s), [cur, bad, cur]))
+
+
 def test_schema_evolution_nulls_for_old_files(catalog, spark, sf_smoke):
     """Files written under schema v1 must surface the v2 column as null."""
     from pyspark.sql.types import LongType, StringType, StructField, StructType

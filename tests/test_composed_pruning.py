@@ -19,7 +19,8 @@ from iceberg_catalog_postgres_spark.catalog.catalog import (
     PostgresCatalog,
     TableIdentifier,
 )
-from iceberg_catalog_postgres_spark.catalog.metadata import FIELD_ID_KEY
+from iceberg_catalog_postgres_spark.catalog.metadata import FIELD_ID_KEY, TableMetadata
+from iceberg_catalog_postgres_spark.catalog.table import Table, transform_value
 
 
 @pytest.fixture
@@ -185,3 +186,105 @@ def test_set_valued_points_chunk_exclusion(catalog, spark, monkeypatch):
         t.planned_files_composed(ranges={"ts": (lo, hi)}, points={"uid": 2})
     )
     assert got == want
+
+
+RENAMED = StructType(
+    [
+        StructField("key", LongType(), True, {FIELD_ID_KEY: 1}),
+        StructField("uid", LongType(), True, {FIELD_ID_KEY: 2}),
+        StructField("event_ts", TimestampType(), True, {FIELD_ID_KEY: 3}),
+    ]
+)
+
+# MANIFEST_CHUNK_READS delta of each planner call on the spilled layout, in
+# call order. Five appends give five chunks, one per two-day band; one chunk
+# holds no file in uid 2's bucket. With an empty rename log the bounds, day
+# and bucket summaries skip chunks; no file is all-null, so IS NOT NULL
+# reads every chunk. After a rename, planned_files and
+# planned_files_nullness walk the per-file dicts: the first call inflates
+# the snapshot (all five chunks), the second reads none. The renamed day
+# entry loses its chunk test, so only the bucket summary still skips.
+CHUNK_READS = {
+    False: {
+        "planned_files": 2,
+        "planned_files_nullness": 5,
+        "planned_files_partition": 1,
+        "planned_files_transformed": 4,
+        "planned_files_transformed_range": 2,
+        "planned_files_composed": 2,
+    },
+    True: {
+        "planned_files": 5,
+        "planned_files_nullness": 0,
+        "planned_files_partition": 5,
+        "planned_files_transformed": 4,
+        "planned_files_transformed_range": 5,
+        "planned_files_composed": 4,
+    },
+}
+
+
+def _inline_view(t):
+    """``t`` with every snapshot's file list inlined in the metadata JSON —
+    the layout below MANIFEST_THRESHOLD — over the very same data files."""
+    md = TableMetadata.from_json(t.metadata.to_json(), store=t.catalog.object_store())
+    for s in md.snapshots:
+        s.data_files  # inflates the per-file dicts from the chunks
+        s.manifests = None
+    inline = TableMetadata.from_json(md.to_json())
+    return Table(t.identifier, t.catalog, inline, t.metadata_location())
+
+
+@pytest.mark.parametrize("rename", [False, True], ids=["plain", "renamed"])
+def test_layout_parity(catalog, spark, monkeypatch, rename):
+    """Every public planner returns the same files whether the snapshot's
+    file list is inline or spilled to manifest chunks
+    (MANIFEST_THRESHOLD=1), with and without a column rename; the point and
+    range planners equal their composed forms; the spilled layout's chunk
+    fetches are pinned per call."""
+    import iceberg_catalog_postgres_spark.catalog.metadata as md_mod
+
+    monkeypatch.setattr(md_mod, "MANIFEST_THRESHOLD", 1)
+    t = _build(catalog, spark, f"parity_{rename}", n_appends=5)
+    if rename:
+        t = t.commit_schema(RENAMED)
+    key, ts = ("key", "event_ts") if rename else ("id", "ts")
+    spilled = catalog.load_table(t.identifier)
+    assert len(spilled.metadata.current_snapshot().chunk_refs() or []) == 5
+    inline = _inline_view(spilled)
+    assert inline.metadata.current_snapshot().manifests is None
+    lo, hi = dt.datetime(2024, 3, 3), dt.datetime(2024, 3, 5, 23, 59, 59)
+    day = f"day({ts})"
+    calls = {
+        "planned_files": lambda x: x.planned_files(ts, lo, hi),
+        "planned_files_nullness": lambda x: x.planned_files_nullness(key, want_null=False),
+        "planned_files_partition": lambda x: x.planned_files_partition(
+            {day: transform_value(day, lo, src_type="timestamp")}
+        ),
+        "planned_files_transformed": lambda x: x.planned_files_transformed({"uid": 2}),
+        "planned_files_transformed_range": lambda x: x.planned_files_transformed_range(
+            ts, lo, hi
+        ),
+        "planned_files_composed": lambda x: x.planned_files_composed(
+            ranges={ts: (lo, hi)}, points={"uid": 2}
+        ),
+    }
+    n_files = len(inline.data_files())
+    reads = {}
+    for name, call in calls.items():
+        before = md_mod.MANIFEST_CHUNK_READS
+        got = sorted(call(spilled))
+        reads[name] = md_mod.MANIFEST_CHUNK_READS - before
+        before = md_mod.MANIFEST_CHUNK_READS
+        assert got == sorted(call(inline)), f"{name}: layouts disagree"
+        assert md_mod.MANIFEST_CHUNK_READS == before, f"{name}: inline read a chunk"
+        if name != "planned_files_nullness":  # no column has a null
+            assert 0 < len(got) < n_files, f"{name}: nothing pruned"
+    assert reads == CHUNK_READS[rename]
+    for x in (spilled, inline):
+        assert x.planned_files_transformed({"uid": 2}) == x.planned_files_composed(
+            points={"uid": 2}
+        )
+        assert x.planned_files_transformed_range(ts, lo, hi) == x.planned_files_composed(
+            ranges={ts: (lo, hi)}
+        )
