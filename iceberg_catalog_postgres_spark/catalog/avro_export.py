@@ -1263,6 +1263,7 @@ def import_iceberg_avro(spark: SparkSession, catalog, identifier, metadata_json_
         Snapshot,
         TableMetadata,
         encode_bound,
+        write_metadata,
     )
 
     with open(metadata_json_path) as fh:
@@ -1584,11 +1585,7 @@ def import_iceberg_avro(spark: SparkSession, catalog, identifier, metadata_json_
             for s in doc.get("partition-statistics", [])
         ],
     )
-    store = catalog.object_store()
-    loc = posixpath.join(
-        md.location, "metadata", f"import-{_uuid.uuid4().hex}.metadata.json"
-    )
-    store.put(loc, md.to_json().encode())
+    loc = write_metadata(catalog.object_store(), md, "import")
     return catalog.register_table(identifier, loc)
 
 

@@ -244,7 +244,13 @@ class PostgresCatalog:
     def update_table(self, identifier: TableIdentifier, metadata_file_location: str, previous_metadata_file_location: str):
         """Atomic pointer swap: succeeds iff the current pointer still equals
         the expected previous value. rowcount==1 => committed; 0 => conflict
-        (mod.rs:340-346). Retry policy belongs to the caller (Transaction)."""
+        (mod.rs:340-346). The library calls it from one place,
+        ``Table._swap_metadata``. Retry policy belongs to the callers: the
+        single-table loop ``Table._commit_metadata_edit`` (metadata edits
+        and ``Transaction.commit``) re-builds on the winner's metadata,
+        while overwrite-style maintenance rewrites make one attempt and
+        ``commit_schema`` / ``update_column_ndv`` recompute by their own
+        rules."""
         _, count = self.backend.execute(
             self.backend.sql(
                 f"UPDATE {CATALOG_TABLE_NAME} SET "
@@ -278,7 +284,7 @@ class PostgresCatalog:
         observes a cross-table intermediate state — the consistency a
         move-rows-between-tables or fact+summary dual write needs. Raises
         ``CommitConflictError`` naming the stale tables; retry policy
-        belongs to the caller (``MultiTableTransaction``)."""
+        belongs to the caller (``multi_txn.swap_all``)."""
         if not updates:
             return []
         seen: set[str] = set()

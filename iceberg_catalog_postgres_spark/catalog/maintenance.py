@@ -1140,20 +1140,15 @@ def _commit_subset_replace(
     ``new_files`` (with their partition tuples) join it, ``kept`` and all
     delete files carry over untouched. Shared by every cohort-rewrite
     path."""
-    import posixpath as _pp
-    import uuid as _uuid
-
     from iceberg_catalog_postgres_spark.catalog.metadata import (
         Snapshot,
         new_snapshot_id,
-        plan_manifests,
     )
     from iceberg_catalog_postgres_spark.catalog.table import collect_file_stats_many
 
     import time as _time
 
     store = table.catalog.object_store()
-    snap = table.metadata.current_snapshot()
 
     new_stats = collect_file_stats_many({rel: store.resolve(rel) for rel in new_files})
     next_seq = table.metadata.next_sequence_number()
@@ -1207,19 +1202,7 @@ def _commit_subset_replace(
             "files-written": str(len(new_files)),
         },
     )
-    plan_manifests(store, table.metadata.location, "overwrite", snap, None, snapshot)
-    new_metadata = table.metadata.with_snapshot(snapshot).with_log_entry(
-        table.metadata_location(), table.metadata.last_updated_ms
-    )
-    new_location = _pp.join(
-        new_metadata.location,
-        "metadata",
-        f"v{len(new_metadata.snapshots) + 1}-{_uuid.uuid4().hex}.metadata.json",
-    )
-    store.put(new_location, new_metadata.to_json().encode())
-    committed = table.catalog.update_table(
-        table.identifier, new_location, table.metadata_location()
-    )
+    committed = table._commit_snapshot(snapshot)
     return committed, len(rewritten), len(kept), len(new_files)
 
 
@@ -1433,7 +1416,6 @@ def rewrite_dvs_to_position_deletes(spark: SparkSession, table: Table) -> Table:
     from iceberg_catalog_postgres_spark.catalog.metadata import (
         Snapshot,
         new_snapshot_id,
-        plan_manifests,
     )
     from iceberg_catalog_postgres_spark.catalog.table import (
         collect_file_stats_many,
@@ -1482,17 +1464,7 @@ def rewrite_dvs_to_position_deletes(spark: SparkSession, table: Table) -> Table:
             "pos-delete-files-written": str(len(new_pos)),
         },
     )
-    plan_manifests(store, table.metadata.location, "overwrite", snap, None, snapshot)
-    new_metadata = table.metadata.with_snapshot(snapshot).with_log_entry(
-        table.metadata_location(), table.metadata.last_updated_ms
-    )
-    new_location = posixpath.join(
-        new_metadata.location, "metadata", f"dvpd-{_uuid.uuid4().hex}.metadata.json"
-    )
-    store.put(new_location, new_metadata.to_json().encode())
-    return table.catalog.update_table(
-        table.identifier, new_location, table.metadata_location()
-    )
+    return table._commit_snapshot(snapshot, "dvpd")
 
 
 def delete_where_cow_predicate(
@@ -1616,7 +1588,6 @@ def _cow_replace_files_commit(
     from iceberg_catalog_postgres_spark.catalog.metadata import (
         Snapshot,
         new_snapshot_id,
-        plan_manifests,
     )
     from iceberg_catalog_postgres_spark.catalog.table import (
         _ensure_stats_friendly_writes,
@@ -1682,25 +1653,7 @@ def _cow_replace_files_commit(
     )
     # CoW removes files from the set (non-additive) -> full manifest rewrite
     # when above the spill threshold.
-    plan_manifests(
-        store, table.metadata.location, "overwrite", None, None, snapshot
-    )
-    new_md = table.metadata.with_snapshot(snapshot).with_log_entry(
-        table.metadata_location(), table.metadata.last_updated_ms
-    )
-    new_location = _pp.join(
-        new_md.location, "metadata",
-        f"v{len(new_md.snapshots) + 1}-{_uuid.uuid4().hex}.metadata.json",
-    )
-    store.put(new_location, new_md.to_json().encode())
-    if pointer_swap is not None:
-        # multi-table commit seam: (identifier, new, prev) -> Table|None
-        return pointer_swap(
-            table.identifier, new_location, table.metadata_location()
-        )
-    return table.catalog.update_table(
-        table.identifier, new_location, table.metadata_location()
-    )
+    return table._commit_snapshot(snapshot, pointer_swap=pointer_swap)
 
 
 @register(
@@ -5276,12 +5229,10 @@ def overwrite_partitions(
     rejected too: there, dynamic overwrite IS full overwrite.
     """
     import time as _time
-    import uuid as _uuid
 
     from iceberg_catalog_postgres_spark.catalog.metadata import (
         Snapshot,
         new_snapshot_id,
-        plan_manifests,
     )
 
     if not table.metadata.partition_spec:
@@ -5378,23 +5329,7 @@ def overwrite_partitions(
             "files-written": str(len(staged_files)),
         },
     )
-    store = table.catalog.object_store()
-    plan_manifests(store, table.metadata.location, "overwrite", snap, None, snapshot)
-    new_metadata = table.metadata.with_snapshot(snapshot).with_log_entry(
-        table.metadata_location(), table.metadata.last_updated_ms
-    )
-    new_location = posixpath.join(
-        new_metadata.location, "metadata", f"dpo-{_uuid.uuid4().hex}.metadata.json"
-    )
-    store.put(new_location, new_metadata.to_json().encode())
-    if pointer_swap is not None:
-        # multi-table commit seam: (identifier, new, prev) -> Table|None
-        return pointer_swap(
-            table.identifier, new_location, table.metadata_location()
-        )
-    return table.catalog.update_table(
-        table.identifier, new_location, table.metadata_location()
-    )
+    return table._commit_snapshot(snapshot, "dpo", pointer_swap)
 
 
 @register(
@@ -6093,20 +6028,9 @@ def update_column_ndv(
             }
         ]
 
-    # every commit path appends the superseded doc to metadata-log so the
-    # pointer history stays walkable (catalog_metadata_log_history) — NDV
-    # commits included (pre-r8 they left silent gaps)
-    new_md = _dc_replace(md, properties=props, statistics=statistics).with_log_entry(
-        table.metadata_location(), md.last_updated_ms
-    )
-    new_location = posixpath.join(
-        md.location, "metadata", f"ndv-{_uuid.uuid4().hex}.metadata.json"
-    )
-    store.put(new_location, new_md.to_json().encode())
+    new_md = _dc_replace(md, properties=props, statistics=statistics)
     try:
-        return table.catalog.update_table(
-            table.identifier, new_location, table.metadata_location()
-        )
+        return table._swap_metadata(new_md, "ndv")
     except CommitConflictError:
         # A concurrent commit (e.g. a streaming append) won the CAS. A blind
         # re-apply could publish a sketch/coverage pair inconsistent with
@@ -6596,15 +6520,8 @@ def update_partition_statistics(spark: SparkSession, table: Table) -> Table:
         "statistics-path": rel_path,
         "file-size-in-bytes": os.path.getsize(pfile),
     }
-    new_md = _dc_replace(md, partition_statistics=[entry]).with_log_entry(
-        table.metadata_location(), md.last_updated_ms
-    )
-    new_location = posixpath.join(
-        md.location, "metadata", f"pstats-{_uuid.uuid4().hex}.metadata.json"
-    )
-    store.put(new_location, new_md.to_json().encode())
-    return table.catalog.update_table(
-        table.identifier, new_location, table.metadata_location()
+    return table._swap_metadata(
+        _dc_replace(md, partition_statistics=[entry]), "pstats"
     )
 
 
@@ -6791,12 +6708,10 @@ def rewrite_position_deletes_to_dvs(spark: SparkSession, table: Table) -> Table:
     (catalog/puffin.py).
     """
     import time as _time
-    import uuid as _uuid
 
     from iceberg_catalog_postgres_spark.catalog.metadata import (
         Snapshot,
         new_snapshot_id,
-        plan_manifests,
     )
 
     snap = table.metadata.current_snapshot()
@@ -6834,17 +6749,7 @@ def rewrite_position_deletes_to_dvs(spark: SparkSession, table: Table) -> Table:
             "dvs-written": str(len(dv_entries)),
         },
     )
-    plan_manifests(store, table.metadata.location, "overwrite", snap, None, snapshot)
-    new_metadata = table.metadata.with_snapshot(snapshot).with_log_entry(
-        table.metadata_location(), table.metadata.last_updated_ms
-    )
-    new_location = posixpath.join(
-        new_metadata.location, "metadata", f"dvrw-{_uuid.uuid4().hex}.metadata.json"
-    )
-    store.put(new_location, new_metadata.to_json().encode())
-    return table.catalog.update_table(
-        table.identifier, new_location, table.metadata_location()
-    )
+    return table._commit_snapshot(snapshot, "dvrw")
 
 
 def rewrite_equality_deletes(
@@ -6883,7 +6788,6 @@ def rewrite_equality_deletes(
     from iceberg_catalog_postgres_spark.catalog.metadata import (
         Snapshot,
         new_snapshot_id,
-        plan_manifests,
     )
     from iceberg_catalog_postgres_spark.catalog.table import collect_file_stats_many
 
@@ -6977,21 +6881,7 @@ def rewrite_equality_deletes(
                 "dvs-written": str(len(dv_entries)),
             },
         )
-        plan_manifests(
-            store, table.metadata.location, "overwrite", snap, None, snapshot
-        )
-        new_metadata = table.metadata.with_snapshot(snapshot).with_log_entry(
-            table.metadata_location(), table.metadata.last_updated_ms
-        )
-        new_location = posixpath.join(
-            new_metadata.location,
-            "metadata",
-            f"rweqdv-{_uuid.uuid4().hex}.metadata.json",
-        )
-        store.put(new_location, new_metadata.to_json().encode())
-        return table.catalog.update_table(
-            table.identifier, new_location, table.metadata_location()
-        )
+        return table._commit_snapshot(snapshot, "rweqdv")
 
     rel_dir = posixpath.join(
         table.metadata.location, "data", f"posdel-rw-{_uuid.uuid4().hex}"
@@ -7033,19 +6923,7 @@ def rewrite_equality_deletes(
             "pos-delete-files-written": str(len(new_pos)),
         },
     )
-    plan_manifests(store, table.metadata.location, "overwrite", snap, None, snapshot)
-    new_metadata = table.metadata.with_snapshot(snapshot).with_log_entry(
-        table.metadata_location(), table.metadata.last_updated_ms
-    )
-    new_location = posixpath.join(
-        new_metadata.location,
-        "metadata",
-        f"rweq-{_uuid.uuid4().hex}.metadata.json",
-    )
-    store.put(new_location, new_metadata.to_json().encode())
-    return table.catalog.update_table(
-        table.identifier, new_location, table.metadata_location()
-    )
+    return table._commit_snapshot(snapshot, "rweq")
 
 
 @register(
@@ -7243,20 +7121,10 @@ def expire_snapshots(
 
     from dataclasses import replace as _dc_replace
 
-    new_md = _dc_replace(md, snapshots=kept, refs=refs).with_log_entry(
-        table.metadata_location(), md.last_updated_ms
+    committed = table._swap_metadata(
+        _dc_replace(md, snapshots=kept, refs=refs), "gc"
     )
-    import posixpath as _pp
-    import uuid as _uuid
-
     store = table.catalog.object_store()
-    new_location = _pp.join(
-        md.location, "metadata", f"gc-{_uuid.uuid4().hex}.metadata.json"
-    )
-    store.put(new_location, new_md.to_json().encode())
-    committed = table.catalog.update_table(
-        table.identifier, new_location, table.metadata_location()
-    )
 
     live_files = (
         {
@@ -7561,12 +7429,10 @@ def backfill_file_stats(table: Table) -> Table:
     idempotent); data bytes are never read — footers only.
     """
     import time as _time
-    import uuid as _uuid
 
     from iceberg_catalog_postgres_spark.catalog.metadata import (
         Snapshot,
         new_snapshot_id,
-        plan_manifests,
     )
     from iceberg_catalog_postgres_spark.catalog.table import collect_file_stats_many
 
@@ -7604,17 +7470,7 @@ def backfill_file_stats(table: Table) -> Table:
             "files-backfilled": str(len(fresh)),
         },
     )
-    plan_manifests(store, table.metadata.location, "overwrite", snap, None, snapshot)
-    new_metadata = table.metadata.with_snapshot(snapshot).with_log_entry(
-        table.metadata_location(), table.metadata.last_updated_ms
-    )
-    new_location = posixpath.join(
-        new_metadata.location, "metadata", f"bf-{_uuid.uuid4().hex}.metadata.json"
-    )
-    store.put(new_location, new_metadata.to_json().encode())
-    return table.catalog.update_table(
-        table.identifier, new_location, table.metadata_location()
-    )
+    return table._commit_snapshot(snapshot, "bf")
 
 
 @register(
@@ -8053,8 +7909,6 @@ def rewrite_manifests(
     per scan; the rewrite itself is O(current file count) metadata-only —
     no data moves.
     """
-    import posixpath as _pp
-    import uuid as _uuid
     from dataclasses import replace as _replace
 
     from iceberg_catalog_postgres_spark.catalog.metadata import (
@@ -8109,14 +7963,8 @@ def rewrite_manifests(
     new_md = _replace(
         md,
         snapshots=[new_snap if s.snapshot_id == snap.snapshot_id else s for s in md.snapshots],
-    ).with_log_entry(table.metadata_location(), md.last_updated_ms)
-    new_location = _pp.join(
-        md.location, "metadata", f"rm-{_uuid.uuid4().hex}.metadata.json"
     )
-    store.put(new_location, new_md.to_json().encode())
-    committed = table.catalog.update_table(
-        table.identifier, new_location, table.metadata_location()
-    )
+    committed = table._swap_metadata(new_md, "rm")
     # GC superseded chunks no snapshot references anymore (chunks shared with
     # older snapshots survive until those snapshots expire). Deleted AFTER the
     # CAS, so readers of the committed history always resolve their chunks.

@@ -194,6 +194,18 @@ Tests assert planning reads only the chunks whose manifest-list summary
 intersects the predicate (Iceberg's two-level pruning)."""
 
 
+def write_metadata(store, md, label: str) -> str:
+    """Write a metadata document (table or view) to a fresh, never-reused
+    ``<location>/metadata/<label>-<uuid>.metadata.json`` and return that
+    path. The one place a metadata file name is composed; swapping the
+    catalog pointer to it is the caller's business."""
+    location = posixpath.join(
+        md.location, "metadata", f"{label}-{uuid.uuid4().hex}.metadata.json"
+    )
+    store.put(location, md.to_json().encode())
+    return location
+
+
 def write_manifest(store, table_location: str, entries: list[dict]) -> str:
     """Write one manifest chunk ({"entries": [{path, kind, seq}]}) under
     ``<location>/metadata/``, content-addressed so identical chunks are

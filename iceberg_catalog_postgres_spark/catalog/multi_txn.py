@@ -21,10 +21,14 @@ Protocol (two-phase, like any Iceberg commit — data first, pointer last):
    database transaction, or none do. A reader can never observe table A's
    new snapshot next to table B's old one.
 3. **Retry** — on conflict (any pointer stale), every transaction rebases
-   onto the freshly-loaded winner state and re-prepares; appends commute,
-   while overwrite/delete/rowdelta transactions validate their base
-   file set first (the same validateNoNewFiles rule solo commits apply)
-   and refuse loudly if a concurrent writer changed it.
+   onto the freshly-loaded winner state and re-prepares; appends and MOR
+   deletes commute, while overwrite and rowdelta transactions validate
+   their base file set first (``Transaction._check_base_files``, the same
+   validateNoNewFiles rule solo commits apply) and refuse loudly if a
+   concurrent writer changed it.
+
+Prepare → swap → retry is one loop, ``swap_all``; the SQL transaction
+scripts (``transaction_sql.execute_script``) run through it too.
 
 Failed prepares leave only uniquely-named orphan metadata/manifest files —
 the identical debris a lost solo CAS race leaves — and orphan GC collects
@@ -37,13 +41,45 @@ data-plane is serialized across tables — only the pointer flips are.
 
 from __future__ import annotations
 
-from iceberg_catalog_postgres_spark.catalog.catalog import (
-    CommitConflictError,
-    TableIdentifier,
-)
+from iceberg_catalog_postgres_spark.catalog.catalog import CommitConflictError
 from iceberg_catalog_postgres_spark.catalog.table import Table, Transaction
 
 __all__ = ["MultiTableTransaction"]
+
+
+def swap_all(catalog, steps, max_retries: int, rebase=None) -> list:
+    """The multi-table swap loop. Each step prepares one slot: called with a
+    ``pointer_swap`` recorder, it builds and writes its metadata and hands
+    ``(identifier, new, prev)`` to the recorder instead of CASing. Then ONE
+    ``catalog.update_tables`` call moves every recorded pointer in one
+    database transaction. Returns, per slot, the committed table — or, for
+    a step that recorded nothing, what the step returned. On conflict
+    nothing has landed: ``rebase()`` runs (if given) and every step
+    prepares again, up to ``max_retries`` times."""
+    for attempt in range(max_retries + 1):
+        swaps: list = []
+        slots: list[int] = []
+        results: list = []
+        for i, step in enumerate(steps):
+            def record(ident, new_loc, prev_loc, _i=i):
+                swaps.append((ident, new_loc, prev_loc))
+                slots.append(_i)
+
+            results.append(step(record))
+        if not swaps:
+            return results
+        try:
+            committed = catalog.update_tables(swaps)
+        except CommitConflictError:
+            if attempt == max_retries:
+                raise
+            if rebase is not None:
+                rebase()
+            continue
+        for i, table in zip(slots, committed):
+            results[i] = table
+        return results
+    raise AssertionError("unreachable")
 
 
 class MultiTableTransaction:
@@ -87,53 +123,20 @@ class MultiTableTransaction:
         database transaction, and return the committed tables in staging
         order. All-or-nothing: a conflict on ANY table commits NOTHING
         (then rebases and retries, bounded)."""
-        if not self._txns:
-            return []
-        for attempt in range(self.max_retries + 1):
-            swaps: list[tuple[TableIdentifier, str, str]] = []
-            prepared: list[tuple[int, TableIdentifier]] = []
-            results: list[Table | None] = [None] * len(self._txns)
-
-            for i, txn in enumerate(self._txns):
-                def record(ident, new_loc, prev_loc, _i=i):
-                    swaps.append((ident, new_loc, prev_loc))
-                    prepared.append((_i, ident))
-                    return None
-
-                out = txn.commit(pointer_swap=record)
-                if out is not None:
-                    # empty transaction or an already-landed fence epoch:
-                    # nothing to swap for this table
-                    results[i] = out
-            if not swaps:
-                return results
-            try:
-                committed = self.catalog.update_tables(swaps)
-            except CommitConflictError:
-                if attempt == self.max_retries:
-                    raise
-                self._rebase()
-                continue
-            for (i, _ident), table in zip(prepared, committed):
-                results[i] = table
-            return results
-        raise AssertionError("unreachable")
+        return swap_all(
+            self.catalog,
+            [lambda record, t=txn: t.commit(pointer_swap=record) for txn in self._txns],
+            self.max_retries,
+            self._rebase,
+        )
 
     def _rebase(self) -> None:
         """Reload every staged table at the winner's state. Appends (and
         MOR deletes) re-apply cleanly; overwrite/rowdelta transactions
         whose base FILE SET changed refuse — their staged files were
-        computed from state that no longer exists (validateNoNewFiles,
-        the same rule ``Transaction.commit`` applies to solo retries)."""
+        computed from state that no longer exists
+        (``Transaction._check_base_files``, the rule solo retries apply)."""
         for txn in self._txns:
             fresh = self.catalog.load_table(txn.table.identifier)
-            if txn._operation in ("overwrite", "rowdelta"):
-                winner_files = frozenset(fresh.metadata.current_data_files())
-                if winner_files != txn._base_data_files:
-                    raise CommitConflictError(
-                        f"{txn.table.identifier}: concurrent commit changed "
-                        "the data-file set during a multi-table "
-                        f"{txn._operation}; recompute from the current "
-                        "snapshot and retry"
-                    )
+            txn._check_base_files(fresh.metadata)
             txn.table = fresh

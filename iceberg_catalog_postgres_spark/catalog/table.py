@@ -9,7 +9,9 @@ Ports the iceberg-rs surfaces the reference invokes (SURVEY §2.B):
   snapshot-producing write => NEW metadata JSON => catalog CAS
   (``update_table``), with a bounded retry loop on conflict (the reference
   errors immediately — SURVEY §5 calls out that its CAS is untested under
-  concurrency; we test it).
+  concurrency; we test it). Every commit, data or metadata-only, writes
+  and swaps through ``Table._swap_metadata``; single-table retries run in
+  ``Table._commit_metadata_edit``.
 
 Spark integration: ``to_df`` plans a DataFrame over exactly the current
 snapshot's data files — scan planning from metadata, not directory listing
@@ -41,6 +43,7 @@ from iceberg_catalog_postgres_spark.catalog.metadata import (
     load_chunk,
     new_snapshot_id,
     plan_manifests,
+    write_metadata,
 )
 
 
@@ -1182,10 +1185,7 @@ class TableBuilder:
         # so readers never have to guess; pre-existing tables lack the
         # property and keep legacy CRC-32 semantics (_bucket_hash_of).
         metadata.properties.setdefault(BUCKET_HASH_PROP, DEFAULT_BUCKET_HASH)
-        metadata_location = posixpath.join(
-            self.location, "metadata", f"v1-{uuid.uuid4().hex}.metadata.json"
-        )
-        self.catalog.object_store().put(metadata_location, metadata.to_json().encode())
+        metadata_location = write_metadata(self.catalog.object_store(), metadata, "v1")
         return self.catalog.register_table(self.identifier, metadata_location)
 
 
@@ -2028,38 +2028,85 @@ class Table:
             ranges={col: (lo, hi)}, snapshot_id=snapshot_id
         )
 
-    def _commit_metadata_edit(self, edit_fn, label: str, max_retries: int = 5) -> "Table":
-        """Commit a metadata-only edit (refs, partition spec, schema) via the
-        CAS swap, with bounded retry: on conflict, reload the winner's
-        metadata and re-apply the edit to it. These edits commute with data
-        commits (they touch disjoint metadata fields), so blind re-apply is
-        safe — unlike an overwrite transaction, nothing computed from the
-        file set is being replayed."""
-        import posixpath as _pp
-        import random as _random
-        import time as _time
-        import uuid as _uuid
+    def _swap_metadata(self, new_md, label: str | None = None, pointer_swap=None):
+        """Make ``new_md`` — built on this handle's metadata — the table's
+        current version. The one write-and-swap step every commit takes:
+        log the superseded document in ``metadata-log``, write the new one
+        (``write_metadata``; ``label`` defaults to ``v<n>``), then CAS the
+        pointer from this handle's location with ``catalog.update_table``
+        — or, in a multi-table commit, hand ``(identifier, new, prev)`` to
+        ``pointer_swap`` and return its result. Never retries: a stale
+        handle raises ``CommitConflictError`` and the caller decides."""
+        new_md = new_md.with_log_entry(
+            self._metadata_location, self.metadata.last_updated_ms
+        )
+        new_location = write_metadata(
+            self.catalog.object_store(),
+            new_md,
+            label or f"v{len(new_md.snapshots) + 1}",
+        )
+        if pointer_swap is not None:
+            return pointer_swap(self.identifier, new_location, self._metadata_location)
+        return self.catalog.update_table(
+            self.identifier, new_location, self._metadata_location
+        )
 
+    def _commit_snapshot(self, snapshot: Snapshot, label: str | None = None, pointer_swap=None):
+        """Commit ``snapshot`` — a maintenance rewrite computed from this
+        handle's file set — as the new head: a full manifest layout,
+        ``with_snapshot``, then ``_swap_metadata``. Single attempt: a blind
+        re-apply on a winner's state would drop the winner's rows, so a
+        stale handle raises ``CommitConflictError``."""
+        plan_manifests(
+            self.catalog.object_store(), self.metadata.location, "overwrite",
+            None, None, snapshot,
+        )
+        return self._swap_metadata(
+            self.metadata.with_snapshot(snapshot), label, pointer_swap
+        )
+
+    def _commit_retries(self) -> int:
+        """Iceberg's ``commit.retry.num-retries`` table property (default
+        5): how many times the single-table commit loop retries a lost CAS."""
+        return int(self.metadata.properties.get("commit.retry.num-retries", 5))
+
+    def _commit_metadata_edit(
+        self, edit_fn, label: str | None, max_retries: int | None = None,
+        pointer_swap=None,
+    ) -> "Table":
+        """The single-table CAS retry loop, shared by every metadata edit
+        (refs, properties, partition spec, truncate, ...) and by
+        ``Transaction.commit``. Each attempt builds ``edit_fn(md)`` against
+        the latest metadata — on a retry, the winner's — and swaps it in
+        with ``_swap_metadata``. ``edit_fn`` returning None means nothing is
+        left to commit (a fenced epoch already landed): the loop returns the
+        current table. Metadata edits commute with data commits (they touch
+        disjoint fields), so re-applying them is safe; ``Transaction``
+        validates its own base file set inside ``edit_fn``.
+
+        The budget is ``max_retries``, else the table's
+        ``commit.retry.num-retries``. With ``pointer_swap`` set there is one
+        attempt: the multi-table caller owns the swap and the retry.
+        Callers that must not re-apply blindly stay single-attempt and call
+        ``_swap_metadata`` / ``_commit_snapshot`` directly: the overwrite-
+        style maintenance rewrites, and ``commit_schema`` /
+        ``update_column_ndv``, which recompute on conflict by their own
+        rules."""
+        if max_retries is None:
+            max_retries = self._commit_retries()
+        if pointer_swap is not None:
+            max_retries = 0
         current = self
         for attempt in range(max_retries + 1):
-            new_md = edit_fn(current.metadata).with_log_entry(
-                current._metadata_location, current.metadata.last_updated_ms
-            )
-            store = current.catalog.object_store()
-            new_location = _pp.join(
-                current.metadata.location,
-                "metadata",
-                f"{label}-{_uuid.uuid4().hex}.metadata.json",
-            )
-            store.put(new_location, new_md.to_json().encode())
+            new_md = edit_fn(current.metadata)
+            if new_md is None:
+                return current
             try:
-                return current.catalog.update_table(
-                    current.identifier, new_location, current._metadata_location
-                )
+                return current._swap_metadata(new_md, label, pointer_swap)
             except CommitConflictError:
                 if attempt == max_retries:
                     raise
-                _time.sleep(_random.uniform(0.01, 0.05) * (attempt + 1))
+                time.sleep(random.uniform(0.01, 0.05) * (attempt + 1))
                 current = current.catalog.load_table(current.identifier)
         raise AssertionError("unreachable")
 
@@ -3355,19 +3402,9 @@ class Table:
             properties=props,
             partition_spec=new_spec,
             partition_spec_log=new_spec_log,
-        ).with_log_entry(self._metadata_location, md.last_updated_ms)
-        import posixpath as _pp
-        import uuid as _uuid
-
-        store = self.catalog.object_store()
-        new_location = _pp.join(
-            md.location, "metadata", f"s{len(md.snapshots)}-{_uuid.uuid4().hex}.metadata.json"
         )
-        store.put(new_location, new_md.to_json().encode())
         try:
-            return self.catalog.update_table(
-                self.identifier, new_location, self._metadata_location
-            )
+            return self._swap_metadata(new_md, f"s{len(md.snapshots)}")
         except CommitConflictError:
             # A DATA commit racing a schema edit commutes: reload the winner
             # and re-apply (validation, rename detection, and as-of-seq all
@@ -3376,10 +3413,7 @@ class Table:
             # when the winner's schema is byte-identical to our base.
             if _retries <= 0:
                 raise
-            import random as _random
-            import time as _time
-
-            _time.sleep(_random.uniform(0.01, 0.05))
+            time.sleep(random.uniform(0.01, 0.05))
             winner = self.catalog.load_table(self.identifier)
             if winner.metadata.schema != md.schema or (
                 winner.metadata.partition_spec != md.partition_spec
@@ -3425,12 +3459,16 @@ class Transaction:
     """Snapshot transaction: stage appended/overwritten files, commit via the
     catalog CAS with bounded retry.
 
-    Commit algorithm (write path E3 in SURVEY §3):
+    Commit algorithm (write path E3 in SURVEY §3), run by the single-table
+    retry loop ``Table._commit_metadata_edit``:
       1. next metadata = current.with_snapshot(new snapshot)
-      2. PUT new metadata JSON at a fresh location (never overwrite)
-      3. CAS UPDATE pointer old->new; on conflict: reload, re-apply staged
-         snapshot on the winner's metadata, retry (append commutes; overwrite
-         last-writer-wins) — up to ``max_retries`` with jittered backoff.
+      2. ``Table._swap_metadata``: PUT the new metadata JSON at a fresh
+         location (never overwrite), then CAS UPDATE the pointer old->new
+      3. on conflict: reload, re-apply the staged snapshot on the winner's
+         metadata and retry — appends and MOR deletes commute; overwrites
+         and row deltas first check the base file set is unchanged
+         (``_check_base_files``) — up to ``max_retries`` (default: the
+         table's ``commit.retry.num-retries``) with jittered backoff.
     """
 
     def _hash_write_target_rows(self) -> int | None:
@@ -3459,13 +3497,11 @@ class Transaction:
         self, table: Table, max_retries: int | None = None, branch: str = "main"
     ):
         self.table = table
-        # Iceberg's commit.retry.num-retries property bounds the CAS loop
-        # (default 5 here); an explicit argument still wins — tests and
-        # internal callers pin their own budget
+        # Iceberg's commit.retry.num-retries property bounds the CAS loop;
+        # an explicit argument still wins — tests and internal callers pin
+        # their own budget
         if max_retries is None:
-            max_retries = int(
-                table.metadata.properties.get("commit.retry.num-retries", 5)
-            )
+            max_retries = table._commit_retries()
         self.max_retries = max_retries
         self.branch = branch
         self._operation: str | None = None
@@ -4188,13 +4224,34 @@ class Transaction:
 
     # -- commit -----------------------------------------------------------
 
+    def _check_base_files(self, md) -> None:
+        """validateNoNewFiles: a staged overwrite (compaction, merge upsert,
+        CoW rewrite) or row delta (MOR merge — its delete positions
+        reference base files) was computed from the base file set; a
+        concurrent commit that changed it (e.g. an append that won the
+        race) would be silently dropped or mis-targeted by re-applying.
+        Appends and MOR deletes commute and retry blindly; overwrites and
+        row deltas raise. Solo retries and multi-table rebases both check
+        here before building on the winner's metadata ``md``."""
+        if self._operation not in ("overwrite", "rowdelta"):
+            return
+        if frozenset(md.current_data_files()) != self._base_data_files:
+            raise CommitConflictError(
+                f"{self.table.identifier}: concurrent commit changed the "
+                f"data-file set during a {self._operation} transaction; "
+                "recompute it from the current snapshot and retry"
+            )
+
     def commit(self, pointer_swap=None) -> Table:
-        """``pointer_swap`` (internal, multi-table commits): a callable
+        """Build the staged snapshot and swap it in through
+        ``Table._commit_metadata_edit``, the single-table retry loop.
+        ``pointer_swap`` (internal, multi-table commits): a callable
         ``(identifier, new_location, prev_location) -> Table|None`` that
         REPLACES the catalog CAS — ``MultiTableTransaction`` passes a
         recorder so every staged table's metadata builds first and ALL
-        pointers swap in one backend transaction. None (the default) is
-        the single-table ``catalog.update_table`` path, unchanged."""
+        pointers swap in one backend transaction; the loop then makes one
+        attempt and the caller retries. None (the default) is the
+        single-table ``catalog.update_table`` path."""
         if self._operation is None:
             return self.table  # empty transaction: no-op
         if self.branch != "main" and self._operation != "append":
@@ -4203,39 +4260,25 @@ class Transaction:
             # rules main commits don't see. Explicit > silently wrong.
             raise ValueError(f"branch commits are append-only, got {self._operation}")
 
-        catalog = self.table.catalog
-        identifier = self.table.identifier
-        store = catalog.object_store()
-        current = self.table  # holds (metadata, metadata_location) we read
+        store = self.table.catalog.object_store()
 
-        for attempt in range(self.max_retries + 1):
+        def build(md):
+            # one attempt's next document, built on ``md`` — on a retry,
+            # the winner's metadata
             if self._fence is not None:
                 fkey, fepoch = self._fence
-                cur_epoch = current.metadata.properties.get(fkey)
+                cur_epoch = md.properties.get(fkey)
                 if cur_epoch is not None and int(cur_epoch) >= fepoch:
                     # this epoch already landed (micro-batch replay after a
                     # torn write, or a zombie twin won the race): no-op —
                     # exactly-once holds because fence + data moved in ONE CAS
-                    return current
-            if attempt > 0 and self._operation in ("overwrite", "rowdelta"):
-                # validateNoNewFiles: the staged overwrite (compaction, merge
-                # upsert, CoW rewrite) or row delta (MOR merge — its delete
-                # positions reference base files) was computed from the base
-                # file set; a concurrent commit that changed it (e.g. an
-                # append that won the race) would be silently dropped or
-                # mis-targeted by re-applying. Appends and MOR deletes
-                # commute and retry blindly; overwrites/row deltas fail.
-                winner_files = frozenset(current.metadata.current_data_files())
-                if winner_files != self._base_data_files:
-                    raise CommitConflictError(
-                        f"{self.table.identifier}: concurrent commit changed the "
-                        "data-file set during an overwrite transaction; recompute "
-                        "the overwrite from the current snapshot and retry"
-                    )
+                    return None
+            if md is not self.table.metadata:
+                self._check_base_files(md)  # a retry on the winner's state
             # Branch commits chain on the BRANCH head (if any), not main:
             # a metadata view with current_snapshot_id repointed makes every
             # current_* read below branch-aware with one switch.
-            base_md = current.metadata
+            base_md = md
             if self.branch != "main" and self.branch in base_md.refs:
                 from dataclasses import replace as _dc_replace
 
@@ -4243,7 +4286,7 @@ class Transaction:
                     base_md,
                     current_snapshot_id=base_md.refs[self.branch]["snapshot-id"],
                 )
-            next_seq = current.metadata.next_sequence_number()
+            next_seq = md.next_sequence_number()
             inherited_seqs = base_md.current_file_seqs()
             inherited_parts = base_md.current_file_partitions()
             inherited_stats = base_md.current_file_stats()
@@ -4320,13 +4363,13 @@ class Transaction:
                 }
             elif self._operation == "delete":
                 # merge-on-read: data files untouched, delete files accumulate
-                data_files = list(current.metadata.current_data_files())
+                data_files = list(md.current_data_files())
                 delete_files = [
-                    *current.metadata.current_delete_files(),
+                    *md.current_delete_files(),
                     *self._staged_delete_files,
                 ]
                 pos_delete_files = [
-                    *current.metadata.current_position_delete_files(),
+                    *md.current_position_delete_files(),
                     *self._staged_pos_delete_files,
                 ]
                 dv_entries = dict(base_md.current_deletion_vectors())
@@ -4359,7 +4402,7 @@ class Transaction:
                 }
                 file_partitions = {**inherited_parts, **self._staged_partitions}
                 file_stats = {**inherited_stats, **self._staged_stats}
-            sid = new_snapshot_id(current.metadata.snapshot_ids())
+            sid = new_snapshot_id(md.snapshot_ids())
             if self._staged_dv_positions:
                 # merge staged vectors with the CURRENT parent's (on a CAS
                 # retry this is the race winner's state): the new blob per
@@ -4389,7 +4432,7 @@ class Transaction:
                 dv_entries = {
                     **dv_entries,
                     **write_dv_sidecar(
-                        store, current.metadata.location, merged, sid, next_seq
+                        store, md.location, merged, sid, next_seq
                     ),
                 }
             snapshot = Snapshot(
@@ -4469,14 +4512,14 @@ class Transaction:
                         e["stats"] = self._staged_stats[e["path"]]
             plan_manifests(
                 store,
-                current.metadata.location,
+                md.location,
                 self._operation,
                 base_md.current_snapshot(),
                 staged_entries,
                 snapshot,
             )
             if self.branch == "main":
-                new_metadata = current.metadata.with_snapshot(snapshot)
+                new_metadata = md.with_snapshot(snapshot)
             else:
                 # branch commit: snapshot joins the lineage, the branch ref
                 # moves, main's head does NOT — readers see nothing until
@@ -4487,15 +4530,13 @@ class Transaction:
                 # BASE; chained commits carry it forward. publish_branch
                 # validates main is still at the base before fast-forwarding,
                 # so a concurrent main commit can never be silently dropped.
-                prior = current.metadata.refs.get(self.branch, {})
-                base = prior.get(
-                    "base-snapshot-id", current.metadata.current_snapshot_id
-                )
+                prior = md.refs.get(self.branch, {})
+                base = prior.get("base-snapshot-id", md.current_snapshot_id)
                 new_metadata = _dc_replace(
-                    current.metadata,
-                    snapshots=[*current.metadata.snapshots, snapshot],
+                    md,
+                    snapshots=[*md.snapshots, snapshot],
                     refs={
-                        **current.metadata.refs,
+                        **md.refs,
                         self.branch: {
                             "snapshot-id": snapshot.snapshot_id,
                             "type": "branch",
@@ -4522,26 +4563,8 @@ class Transaction:
                 # identical one) and make it the document default, in the
                 # same CAS as the data it describes
                 new_metadata = new_metadata.with_sort_order(self._sort_by)
-            new_metadata = new_metadata.with_log_entry(
-                current.metadata_location(), current.metadata.last_updated_ms
-            )
-            new_location = posixpath.join(
-                new_metadata.location,
-                "metadata",
-                f"v{len(new_metadata.snapshots) + 1}-{uuid.uuid4().hex}.metadata.json",
-            )
-            store.put(new_location, new_metadata.to_json().encode())
-            if pointer_swap is not None:
-                # multi-table commit: the caller owns the CAS (and retries)
-                return pointer_swap(
-                    identifier, new_location, current.metadata_location()
-                )
-            try:
-                return catalog.update_table(identifier, new_location, current.metadata_location())
-            except CommitConflictError:
-                if attempt == self.max_retries:
-                    raise
-                # Re-read the winner's state and re-apply our staged files.
-                time.sleep(random.uniform(0.01, 0.05) * (attempt + 1))
-                current = catalog.load_table(identifier)
-        raise AssertionError("unreachable")
+            return new_metadata
+
+        return self.table._commit_metadata_edit(
+            build, None, self.max_retries, pointer_swap
+        )

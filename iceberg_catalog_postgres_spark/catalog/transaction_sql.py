@@ -36,10 +36,6 @@ from __future__ import annotations
 
 import inspect
 
-from iceberg_catalog_postgres_spark.catalog.catalog import (
-    CommitConflictError,
-    TableIdentifier,
-)
 from iceberg_catalog_postgres_spark.catalog.merge_sql import (
     _kw,
     _render,
@@ -54,6 +50,7 @@ from iceberg_catalog_postgres_spark.catalog.merge_sql import (
     parse_update,
     update_sql,
 )
+from iceberg_catalog_postgres_spark.catalog.multi_txn import swap_all
 
 __all__ = ["execute_script", "parse_script"]
 
@@ -122,34 +119,19 @@ def execute_script(spark, catalog, script: str, max_retries: int = 5, **kwargs):
     returns None in its slot). ``kwargs`` (``strategy``,
     ``preserve_lineage``, ``sources``, ...) forward to every statement
     that accepts them, like ``execute_dml``."""
-    body = parse_script(script)
-    if not body:
-        return []
-    for attempt in range(max_retries + 1):
-        swaps: list[tuple[TableIdentifier, str, str]] = []
-        order: list[tuple[int, str]] = []
-        for i, (kw, _target, text) in enumerate(body):
-            def record(ident, new_loc, prev_loc, _i=i):
-                swaps.append((ident, new_loc, prev_loc))
-                order.append((_i, str(ident)))
-                return None
+    def step(kw: str, text: str):
+        fn = _STATEMENTS[kw][0]
+        accepted = set(inspect.signature(fn).parameters)
+        opts = {k: v for k, v in kwargs.items() if k in accepted}
 
-            fn = _STATEMENTS[kw][0]
-            accepted = set(inspect.signature(fn).parameters)
-            fn(
-                spark, catalog, text, pointer_swap=record,
-                **{k: v for k, v in kwargs.items() if k in accepted},
-            )
-        if not swaps:
-            return [None] * len(body)
-        try:
-            committed = catalog.update_tables(swaps)
-        except CommitConflictError:
-            if attempt == max_retries:
-                raise
-            continue  # nothing landed; engines recompute from fresh state
-        results: list = [None] * len(body)
-        for (i, _ident), table in zip(order, committed):
-            results[i] = table
-        return results
-    raise AssertionError("unreachable")
+        def run(record) -> None:
+            fn(spark, catalog, text, pointer_swap=record, **opts)
+
+        return run
+
+    # no rebase: a retry re-runs every engine from freshly loaded state
+    return swap_all(
+        catalog,
+        [step(kw, text) for kw, _target, text in parse_script(script)],
+        max_retries,
+    )

@@ -53,6 +53,7 @@ from iceberg_catalog_postgres_spark.catalog.catalog import (
     TableAlreadyExistsError,
     TableIdentifier,
 )
+from iceberg_catalog_postgres_spark.catalog.metadata import write_metadata
 
 __all__ = [
     "ViewMetadata",
@@ -209,12 +210,7 @@ def _validate_view_sql(sql: str) -> str:
 
 
 def _put_metadata(catalog, ident: TableIdentifier, md: ViewMetadata) -> str:
-    rel = posixpath.join(
-        md.location, "metadata",
-        f"v{md.current_version_id}-{uuid.uuid4().hex}.metadata.json",
-    )
-    catalog.object_store().put(rel, md.to_json().encode("utf-8"))
-    return rel
+    return write_metadata(catalog.object_store(), md, f"v{md.current_version_id}")
 
 
 def view_exists(catalog, identifier: TableIdentifier) -> bool:

@@ -619,6 +619,46 @@ def test_overwrite_retry_validates_no_new_files(catalog, spark):
     ) == [1, 2, 3, 4]
 
 
+def test_stale_maintenance_commits_never_retry_blindly(catalog, spark, monkeypatch):
+    """Overwrite-style maintenance commits make one CAS attempt: on a stale
+    handle (a concurrent append won the race) they raise instead of
+    re-applying a rewrite computed from the old file set, which would drop
+    the winner's rows. The winner's pointer, files and rows stay intact."""
+    import os
+
+    from iceberg_catalog_postgres_spark.catalog import maintenance as mx
+    from iceberg_catalog_postgres_spark.catalog import metadata as md_mod
+    from iceberg_catalog_postgres_spark.catalog.catalog import CommitConflictError
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    monkeypatch.setattr(md_mod, "MANIFEST_THRESHOLD", 1)  # chunked chain
+    schema = StructType([StructField("k", LongType(), True)])
+    ident = TableIdentifier.parse("test.stalemaint")
+    t = catalog.create_table(ident, schema)
+    for i in range(4):
+        t = t.new_transaction().append_rows(spark, [(i,)], schema).commit()
+    stale = catalog.load_table(ident)
+    winner = t.new_transaction().append_rows(spark, [(99,)], schema).commit()
+    store = catalog.object_store()
+    for name, run in (
+        ("expire_snapshots", lambda: mx.expire_snapshots(stale, keep_last=1)),
+        ("rewrite_manifests", lambda: mx.rewrite_manifests(stale, max_chunks=1)),
+        (
+            "rewrite_small_files",
+            lambda: mx.rewrite_small_files(spark, stale, target_rows=100),
+        ),
+    ):
+        with pytest.raises(CommitConflictError):
+            run()
+        now = catalog.load_table(ident)
+        assert now.metadata_location() == winner.metadata_location(), name
+        assert all(
+            os.path.exists(store.resolve(f))
+            for f in winner.metadata.current_data_files()
+        ), name
+        assert now.record_count() == 5, name
+
+
 def test_snapshot_ids_collision_free_and_in_range(catalog, spark):
     """Snapshot ids come from uuid4 entropy masked to 63 bits (positive
     int64), re-rolled against existing ids — epoch-ms ids collided for

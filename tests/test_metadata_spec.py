@@ -683,16 +683,19 @@ def test_ndv_commit_appends_metadata_log(catalog, spark):
 
 def test_every_maintenance_commit_appends_metadata_log(catalog, spark, monkeypatch):
     """r8 audit extending the ADVICE NDV finding: EVERY direct-commit
-    maintenance path (compaction, CoW delete, eq-delete rewrite, snapshot
-    expiry, stats backfill, manifest rewrite, dynamic partition overwrite)
-    must append the superseded document to metadata-log like Transaction /
-    schema / NDV commits do — otherwise the walkable pointer history
-    advertised by catalog_metadata_log_history has silent gaps."""
+    maintenance path (compaction, CoW delete, eq-delete rewrite and its
+    deletion-vector branch, both deletion-vector conversions, snapshot
+    expiry, stats backfill, manifest rewrite, truncate, dynamic partition
+    overwrite, partition statistics) and schema evolution must append the
+    superseded document to metadata-log like Transaction / NDV commits do —
+    otherwise the walkable pointer history advertised by
+    catalog_metadata_log_history has silent gaps."""
     from iceberg_catalog_postgres_spark.catalog import maintenance as mx
     from iceberg_catalog_postgres_spark.catalog import metadata as md_mod
 
-    def assert_logged(before_t, after_t, label):
+    def assert_logged(before_t, after_t, label, committed=False):
         if after_t.metadata_location() == before_t.metadata_location():
+            assert not committed, f"{label}: expected a commit"
             return after_t  # no-op path: nothing committed, nothing to log
         log = after_t.metadata.metadata_log
         assert log and log[-1]["metadata-file"] == before_t.metadata_location(), (
@@ -724,6 +727,22 @@ def test_every_maintenance_commit_appends_metadata_log(catalog, spark, monkeypat
     t = mx.rewrite_equality_deletes(spark, t)
     t = assert_logged(before, t, "rewrite_equality_deletes")
 
+    # deletion-vector conversions, both directions
+    before = t
+    t = mx.rewrite_position_deletes_to_dvs(spark, t)
+    t = assert_logged(before, t, "rewrite_position_deletes_to_dvs", True)
+    before = t
+    t = mx.rewrite_dvs_to_position_deletes(spark, t)
+    t = assert_logged(before, t, "rewrite_dvs_to_position_deletes", True)
+
+    # the deletion-vector branch of the equality-delete rewrite
+    t = t.new_transaction().delete_keys_dataframe(
+        spark.createDataFrame([(50,)], "k long").coalesce(1)
+    ).commit()
+    before = t
+    t = mx.rewrite_equality_deletes(spark, t, to_dv=True)
+    t = assert_logged(before, t, "rewrite_equality_deletes(to_dv)", True)
+
     before = t
     t = mx.backfill_file_stats(t)
     t = assert_logged(before, t, "backfill_file_stats")
@@ -742,6 +761,16 @@ def test_every_maintenance_commit_appends_metadata_log(catalog, spark, monkeypat
     t = mx.rewrite_manifests(t, max_chunks=1)
     t = assert_logged(before, t, "rewrite_manifests")
 
+    before = t
+    t = t.commit_schema(
+        StructType([*t.schema.fields, StructField("extra", StringType(), True)])
+    )
+    t = assert_logged(before, t, "commit_schema", True)
+
+    before = t
+    t = mx.truncate_table(t)
+    t = assert_logged(before, t, "truncate_table", True)
+
     # dynamic partition overwrite needs an identity-partitioned table
     ids2 = TableIdentifier.parse("spec.mlog_dpo")
     S2 = S
@@ -754,6 +783,10 @@ def test_every_maintenance_commit_appends_metadata_log(catalog, spark, monkeypat
         spark, t2, spark.createDataFrame([rows[0]], S2)
     )
     assert_logged(before2, t2, "overwrite_partitions")
+
+    before2 = t2
+    t2 = mx.update_partition_statistics(spark, t2)
+    assert_logged(before2, t2, "update_partition_statistics", True)
 
 
 def test_dropped_historical_spec_source_omits_that_spec(catalog, spark):

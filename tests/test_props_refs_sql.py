@@ -289,6 +289,34 @@ def test_commit_retries_from_property(spark, catalog):
 
     assert Transaction(t, max_retries=9).max_retries == 9
 
+    # the same budget bounds metadata edits: with "0", a stale handle's
+    # property or ref edit fails on its first lost CAS instead of retrying
+    from iceberg_catalog_postgres_spark.catalog.catalog import CommitConflictError
+
+    schema = "k int, name string, r long"
+
+    def stale_after_append(t):
+        stale = catalog.load_table(t.identifier)
+        t.new_transaction().append_rows(spark, [(100, "x", 0)], schema).commit()
+        return stale
+
+    t = t.update_properties(set_props={"commit.retry.num-retries": "0"})
+    with pytest.raises(CommitConflictError):
+        stale_after_append(t).update_properties(set_props={"owner": "me"})
+    t = t.refresh()
+    with pytest.raises(CommitConflictError):
+        stale_after_append(t).set_ref("pinned")
+    t = t.refresh()
+    assert "owner" not in t.metadata.properties and "pinned" not in t.metadata.refs
+
+    # with the default budget both re-apply on the winner and land
+    t = t.update_properties(unset_keys=["commit.retry.num-retries"])
+    t = stale_after_append(t).update_properties(set_props={"owner": "me"})
+    assert t.metadata.properties["owner"] == "me"
+    t = stale_after_append(t).set_ref("pinned")
+    assert "pinned" in t.metadata.refs
+    assert t.record_count() == 9 + 4  # every winner's append survived
+
 
 # ---------------------------------------------------------------------------
 # snapshot-management CALL procedures + branch-write identifier (r13)
