@@ -55,6 +55,13 @@ class CorruptCatalogError(CatalogError):
     """More rows than the PK permits (mod.rs:233-235) — defensive check."""
 
 
+def commit_retries(properties: dict) -> int:
+    """Iceberg's ``commit.retry.num-retries`` property (default 5): how many
+    times a lost pointer CAS is retried — by the single-table loop, the
+    multi-table swap and view replaces alike."""
+    return int(properties.get("commit.retry.num-retries", 5))
+
+
 @dataclass(frozen=True)
 class TableIdentifier:
     """``ns.name`` dotted identifier (mod.rs:8, parse at mod.rs:93)."""
@@ -241,14 +248,25 @@ class PostgresCatalog:
         return Table(identifier, self, metadata, metadata_location)  # mod.rs:222-228
 
     # -- §2.A#9 update_table (mod.rs:296-347) — THE CAS commit ------------
-    def update_table(self, identifier: TableIdentifier, metadata_file_location: str, previous_metadata_file_location: str):
+    def update_table(
+        self,
+        identifier: TableIdentifier,
+        metadata_file_location: str,
+        previous_metadata_file_location: str,
+        metadata: TableMetadata | None = None,
+    ):
         """Atomic pointer swap: succeeds iff the current pointer still equals
         the expected previous value. rowcount==1 => committed; 0 => conflict
-        (mod.rs:340-346). The library calls it from one place,
-        ``Table._swap_metadata``. Retry policy belongs to the callers: the
-        single-table loop ``Table._commit_metadata_edit`` (metadata edits
-        and ``Transaction.commit``) re-builds on the winner's metadata,
-        while overwrite-style maintenance rewrites make one attempt and
+        (mod.rs:340-346). On success the returned ``Table`` wraps
+        ``metadata``, the document the caller wrote to
+        ``metadata_file_location``, so a commit costs one statement. Without
+        it the table is reloaded, as the reference does (mod.rs:341).
+
+        The library calls it from one place, ``Table._swap_metadata``.
+        Retry policy belongs to the callers: the single-table loop
+        ``Table._commit_metadata_edit`` (metadata edits and
+        ``Transaction.commit``) re-builds on the winner's metadata, while
+        overwrite-style maintenance rewrites make one attempt and
         ``commit_schema`` / ``update_column_ndv`` recompute by their own
         rules."""
         _, count = self.backend.execute(
@@ -272,23 +290,29 @@ class PostgresCatalog:
                 f"Commit conflict for {identifier}: expected pointer "
                 f"{previous_metadata_file_location!r} was stale."
             )
-        return self.load_table(identifier)
+        if metadata is None:
+            return self.load_table(identifier)
+        from iceberg_catalog_postgres_spark.catalog.table import Table
+
+        return Table(identifier, self, metadata, metadata_file_location)
 
     def update_tables(
-        self, updates: list[tuple["TableIdentifier", str, str]]
+        self, updates: list[tuple[TableIdentifier, str, str, TableMetadata]]
     ) -> list:
         """ATOMIC multi-table pointer swap (§2.A#9 extended — the Iceberg
         REST catalog's multi-table commit on a plain SQL catalog): every
-        (identifier, new_location, expected_previous_location) CAS lands in
-        ONE database transaction, or none do. A reader therefore never
-        observes a cross-table intermediate state — the consistency a
-        move-rows-between-tables or fact+summary dual write needs. Raises
+        ``(identifier, new_location, expected_previous_location,
+        metadata)`` CAS lands in ONE database transaction, or none do. A
+        reader therefore never observes a cross-table intermediate state —
+        the consistency a move-rows-between-tables or fact+summary dual
+        write needs. Returns the committed tables in order, each wrapping
+        its ``metadata``, the document written to ``new_location``. Raises
         ``CommitConflictError`` naming the stale tables; retry policy
         belongs to the caller (``multi_txn.swap_all``)."""
         if not updates:
             return []
         seen: set[str] = set()
-        for ident, _, _ in updates:
+        for ident, _, _, _ in updates:
             if str(ident) in seen:
                 raise ValueError(f"duplicate table in multi-table commit: {ident}")
             seen.add(str(ident))
@@ -304,7 +328,7 @@ class PostgresCatalog:
                 (new_loc, prev_loc, self.name, ident.namespace_str,
                  ident.name, prev_loc),
             )
-            for ident, new_loc, prev_loc in updates
+            for ident, new_loc, prev_loc, _ in updates
         ]
         counts = self.backend.execute_atomic_cas(statements)
         if not all(c == 1 for c in counts):
@@ -315,7 +339,9 @@ class PostgresCatalog:
                 f"multi-table commit conflict: stale pointer(s) for "
                 f"{', '.join(stale)}; nothing was committed"
             )
-        return [self.load_table(ident) for ident, _, _ in updates]
+        from iceberg_catalog_postgres_spark.catalog.table import Table
+
+        return [Table(ident, self, md, new_loc) for ident, new_loc, _, md in updates]
 
     # -- §2.A#10 drop_table (mod.rs:138-175) ------------------------------
     def drop_table(self, identifier: TableIdentifier) -> None:

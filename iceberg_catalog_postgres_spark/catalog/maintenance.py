@@ -7940,10 +7940,8 @@ def rewrite_manifests(
     if not fragmented and not oversized:
         return table
     store = table.catalog.object_store()
-    consolidated = [
-        make_chunk(store, md.location, part)
-        for part in split_entries(entries, target)
-    ]
+    parts = split_entries(entries, target)
+    consolidated = [make_chunk(store, md.location, part) for part in parts]
     new_snap = Snapshot(
         snapshot_id=snap.snapshot_id,
         timestamp_ms=snap.timestamp_ms,
@@ -7960,6 +7958,7 @@ def rewrite_manifests(
         deletion_vectors=dict(snap.deletion_vectors),
         first_row_ids=dict(snap.first_row_ids),
     )
+    new_snap.order_like_chunks(parts)
     new_md = _replace(
         md,
         snapshots=[new_snap if s.snapshot_id == snap.snapshot_id else s for s in md.snapshots],

@@ -421,7 +421,9 @@ def plan_manifests(
     ``snapshot.manifests``): inline up to ``MANIFEST_THRESHOLD`` entries;
     above it, reuse the parent's chunks plus one delta chunk for additive
     operations (append / MOR delete with ``staged_entries``), else one full
-    rewrite."""
+    rewrite. A chunked snapshot's in-memory file lists are then put in
+    chunk order (``Snapshot.order_like_chunks``), so the committed table
+    equals what a reader inflating ``manifests`` loads."""
     total = (
         len(snapshot.data_files)
         + len(snapshot.delete_files)
@@ -440,23 +442,25 @@ def plan_manifests(
         # delta chunks are usually small; a bulk load bigger than the
         # chunk target still splits so no single commit can produce an
         # unprunable mega-chunk (r16)
-        deltas = (
+        parts = (
             [staged_entries]
             if len(staged_entries) <= MANIFEST_CHUNK_TARGET
             else split_entries(staged_entries)
         )
         snapshot.manifests = [
             *prev_snapshot.manifests,
-            *(make_chunk(store, table_location, d) for d in deltas),
+            *(make_chunk(store, table_location, d) for d in parts),
         ]
+        snapshot.order_like_chunks(parts, prev_snapshot)
     else:
         # full rewrite: CLUSTERED bounded chunks (r16) — one chunk per
         # ~MANIFEST_CHUNK_TARGET entries, partition/bounds-sorted so each
         # summary stays selective at 10^7 files
+        parts = split_entries(snapshot_entries(snapshot))
         snapshot.manifests = [
-            make_chunk(store, table_location, part)
-            for part in split_entries(snapshot_entries(snapshot))
+            make_chunk(store, table_location, part) for part in parts
         ]
+        snapshot.order_like_chunks(parts)
 
 
 def new_snapshot_id(existing: set[int] | None = None) -> int:
@@ -634,6 +638,41 @@ class Snapshot:
                 if e.get("stats") is not None:
                     self._file_stats[path] = e["stats"]
         self._inflated = True
+
+    def order_like_chunks(self, parts: list[list[dict]], parent=None) -> None:
+        """Re-order the per-kind file lists to what inflating ``manifests``
+        yields: ``parent``'s lists (an additive layout reusing its chunks),
+        then the entries of ``parts``, the chunks just written, in order."""
+        lists = {
+            "data": list(parent.data_files) if parent else [],
+            "eq-delete": list(parent.delete_files) if parent else [],
+            "pos-delete": list(parent.position_delete_files) if parent else [],
+        }
+        for part in parts:
+            for e in part:
+                lists[e["kind"]].append(e["path"])
+        self._data_files = lists["data"]
+        self._delete_files = lists["eq-delete"]
+        self._position_delete_files = lists["pos-delete"]
+
+    def deferred(self, store) -> "Snapshot":
+        """This snapshot as ``from_json`` loads it: itself when inline or not
+        yet inflated, else a copy that keeps the chunk refs and the inline
+        maps and reads its file lists from ``store`` again on demand."""
+        if self.manifests is None or not self._inflated:
+            return self
+        return Snapshot(
+            snapshot_id=self.snapshot_id,
+            timestamp_ms=self.timestamp_ms,
+            operation=self.operation,
+            summary=self.summary,
+            sequence_number=self.sequence_number,
+            manifests=self.manifests,
+            store=store,
+            deferred=True,
+            deletion_vectors=self._deletion_vectors,
+            first_row_ids=self._first_row_ids,
+        )
 
     @property
     def data_files(self) -> list[str]:
@@ -873,6 +912,21 @@ class TableMetadata:
         }
         log = [*self.metadata_log, entry][-self.METADATA_LOG_MAX:]
         return _dc_replace(self, metadata_log=log)
+
+    def with_history_deferred(self, store) -> "TableMetadata":
+        """This document with every snapshot but the current one as
+        ``from_json`` loads it (``Snapshot.deferred``). A table handed back
+        by a commit then holds the file lists of its current snapshot only,
+        not one inflated set per commit it was built through."""
+        from dataclasses import replace as _dc_replace
+
+        return _dc_replace(
+            self,
+            snapshots=[
+                s if s.snapshot_id == self.current_snapshot_id else s.deferred(store)
+                for s in self.snapshots
+            ],
+        )
 
     @staticmethod
     def new(
@@ -1146,7 +1200,6 @@ class TableMetadata:
                 "partition-spec": self.partition_spec,
                 "partition-spec-log": self.partition_spec_log,
             },
-            indent=2,
         )
 
     def with_sort_order(self, columns: list) -> "TableMetadata":

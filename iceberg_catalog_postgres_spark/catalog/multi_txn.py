@@ -41,45 +41,53 @@ data-plane is serialized across tables — only the pointer flips are.
 
 from __future__ import annotations
 
-from iceberg_catalog_postgres_spark.catalog.catalog import CommitConflictError
+from iceberg_catalog_postgres_spark.catalog.catalog import (
+    CommitConflictError,
+    commit_retries,
+)
 from iceberg_catalog_postgres_spark.catalog.table import Table, Transaction
 
 __all__ = ["MultiTableTransaction"]
 
 
-def swap_all(catalog, steps, max_retries: int, rebase=None) -> list:
+def swap_all(catalog, steps, max_retries: int | None = None, rebase=None) -> list:
     """The multi-table swap loop. Each step prepares one slot: called with a
     ``pointer_swap`` recorder, it builds and writes its metadata and hands
-    ``(identifier, new, prev)`` to the recorder instead of CASing. Then ONE
-    ``catalog.update_tables`` call moves every recorded pointer in one
-    database transaction. Returns, per slot, the committed table — or, for
-    a step that recorded nothing, what the step returned. On conflict
-    nothing has landed: ``rebase()`` runs (if given) and every step
-    prepares again, up to ``max_retries`` times."""
-    for attempt in range(max_retries + 1):
+    ``(identifier, new, prev, metadata)`` to the recorder instead of
+    CASing. Then ONE ``catalog.update_tables`` call moves every recorded
+    pointer in one database transaction and returns, per slot, the
+    committed table built from the recorded metadata — or, for a step that
+    recorded nothing, what the step returned. On conflict nothing has
+    landed: ``rebase()`` runs (if given) and every step prepares again, up
+    to ``max_retries`` times. ``max_retries`` None means the smallest
+    ``commit.retry.num-retries`` among the first attempt's documents."""
+    attempt = 0
+    while True:
         swaps: list = []
         slots: list[int] = []
         results: list = []
         for i, step in enumerate(steps):
-            def record(ident, new_loc, prev_loc, _i=i):
-                swaps.append((ident, new_loc, prev_loc))
+            def record(ident, new_loc, prev_loc, md, _i=i):
+                swaps.append((ident, new_loc, prev_loc, md))
                 slots.append(_i)
 
             results.append(step(record))
         if not swaps:
             return results
+        if max_retries is None:
+            max_retries = min(commit_retries(md.properties) for *_, md in swaps)
         try:
             committed = catalog.update_tables(swaps)
         except CommitConflictError:
-            if attempt == max_retries:
+            if attempt >= max_retries:
                 raise
+            attempt += 1
             if rebase is not None:
                 rebase()
             continue
         for i, table in zip(slots, committed):
             results[i] = table
         return results
-    raise AssertionError("unreachable")
 
 
 class MultiTableTransaction:
@@ -92,7 +100,9 @@ class MultiTableTransaction:
         hot2, cold2 = mt.commit()
     """
 
-    def __init__(self, catalog, max_retries: int = 5):
+    def __init__(self, catalog, max_retries: int | None = None):
+        """``max_retries`` None follows the staged tables: the smallest
+        ``commit.retry.num-retries`` among them (default 5)."""
         self.catalog = catalog
         self.max_retries = max_retries
         self._txns: list[Transaction] = []

@@ -34,6 +34,7 @@ from iceberg_catalog_postgres_spark.catalog.catalog import (
     CommitConflictError,
     PostgresCatalog,
     TableIdentifier,
+    commit_retries,
 )
 from iceberg_catalog_postgres_spark.catalog.metadata import (
     Snapshot,
@@ -2034,21 +2035,27 @@ class Table:
         log the superseded document in ``metadata-log``, write the new one
         (``write_metadata``; ``label`` defaults to ``v<n>``), then CAS the
         pointer from this handle's location with ``catalog.update_table``
-        — or, in a multi-table commit, hand ``(identifier, new, prev)`` to
-        ``pointer_swap`` and return its result. Never retries: a stale
-        handle raises ``CommitConflictError`` and the caller decides."""
+        — or, in a multi-table commit, hand ``(identifier, new, prev,
+        logged_md)`` to ``pointer_swap`` and return its result. The logged
+        document goes along with the swap, so the committed ``Table`` wraps
+        it instead of re-reading what was just written; only its current
+        snapshot stays inflated, the earlier ones reload from their chunks
+        on demand as after a ``load_table``. Never retries: a stale handle
+        raises ``CommitConflictError`` and the caller decides."""
+        store = self.catalog.object_store()
         new_md = new_md.with_log_entry(
             self._metadata_location, self.metadata.last_updated_ms
         )
         new_location = write_metadata(
-            self.catalog.object_store(),
-            new_md,
-            label or f"v{len(new_md.snapshots) + 1}",
+            store, new_md, label or f"v{len(new_md.snapshots) + 1}"
         )
+        new_md = new_md.with_history_deferred(store)
         if pointer_swap is not None:
-            return pointer_swap(self.identifier, new_location, self._metadata_location)
+            return pointer_swap(
+                self.identifier, new_location, self._metadata_location, new_md
+            )
         return self.catalog.update_table(
-            self.identifier, new_location, self._metadata_location
+            self.identifier, new_location, self._metadata_location, new_md
         )
 
     def _commit_snapshot(self, snapshot: Snapshot, label: str | None = None, pointer_swap=None):
@@ -2064,11 +2071,6 @@ class Table:
         return self._swap_metadata(
             self.metadata.with_snapshot(snapshot), label, pointer_swap
         )
-
-    def _commit_retries(self) -> int:
-        """Iceberg's ``commit.retry.num-retries`` table property (default
-        5): how many times the single-table commit loop retries a lost CAS."""
-        return int(self.metadata.properties.get("commit.retry.num-retries", 5))
 
     def _commit_metadata_edit(
         self, edit_fn, label: str | None, max_retries: int | None = None,
@@ -2093,7 +2095,7 @@ class Table:
         ``update_column_ndv``, which recompute on conflict by their own
         rules."""
         if max_retries is None:
-            max_retries = self._commit_retries()
+            max_retries = commit_retries(self.metadata.properties)
         if pointer_swap is not None:
             max_retries = 0
         current = self
@@ -3501,7 +3503,7 @@ class Transaction:
         # an explicit argument still wins — tests and internal callers pin
         # their own budget
         if max_retries is None:
-            max_retries = table._commit_retries()
+            max_retries = commit_retries(table.metadata.properties)
         self.max_retries = max_retries
         self.branch = branch
         self._operation: str | None = None
@@ -4246,8 +4248,8 @@ class Transaction:
         """Build the staged snapshot and swap it in through
         ``Table._commit_metadata_edit``, the single-table retry loop.
         ``pointer_swap`` (internal, multi-table commits): a callable
-        ``(identifier, new_location, prev_location) -> Table|None`` that
-        REPLACES the catalog CAS — ``MultiTableTransaction`` passes a
+        ``(identifier, new_location, prev_location, metadata) -> Table|None``
+        that REPLACES the catalog CAS — ``MultiTableTransaction`` passes a
         recorder so every staged table's metadata builds first and ALL
         pointers swap in one backend transaction; the loop then makes one
         attempt and the caller retries. None (the default) is the

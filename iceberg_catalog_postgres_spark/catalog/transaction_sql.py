@@ -113,12 +113,15 @@ def parse_script(script: str) -> list[tuple[str, str, str]]:
     return out
 
 
-def execute_script(spark, catalog, script: str, max_retries: int = 5, **kwargs):
+def execute_script(
+    spark, catalog, script: str, max_retries: int | None = None, **kwargs
+):
     """Run a ``BEGIN; <dml>; ...; COMMIT`` script atomically and return
     the committed Tables in statement order (a provably no-op statement
-    returns None in its slot). ``kwargs`` (``strategy``,
-    ``preserve_lineage``, ``sources``, ...) forward to every statement
-    that accepts them, like ``execute_dml``."""
+    returns None in its slot). ``max_retries`` None follows the target
+    tables: the smallest ``commit.retry.num-retries`` among them (default
+    5). ``kwargs`` (``strategy``, ``preserve_lineage``, ``sources``, ...)
+    forward to every statement that accepts them, like ``execute_dml``."""
     def step(kw: str, text: str):
         fn = _STATEMENTS[kw][0]
         accepted = set(inspect.signature(fn).parameters)

@@ -37,6 +37,7 @@ from __future__ import annotations
 
 import json
 import posixpath
+import random
 import time
 import uuid
 from dataclasses import dataclass, field, replace as _dc_replace
@@ -52,6 +53,7 @@ from iceberg_catalog_postgres_spark.catalog.catalog import (
     NoSuchTableError,
     TableAlreadyExistsError,
     TableIdentifier,
+    commit_retries,
 )
 from iceberg_catalog_postgres_spark.catalog.metadata import write_metadata
 
@@ -146,8 +148,7 @@ class ViewMetadata:
                 "version-log": self.version_log,
                 "schemas": self.schemas,
                 "properties": self.properties,
-            },
-            indent=1,
+            }
         )
 
     @staticmethod
@@ -336,9 +337,12 @@ def _replace_view(
 ) -> View:
     """Append a new version + CAS the pointer (retrying on a concurrent
     replace by re-reading and re-appending — versions are append-only, so
-    replace commutes the way table appends do)."""
-    for attempt in range(5):
-        cur = load_view(catalog, identifier)
+    replace commutes the way table appends do). The view's
+    ``commit.retry.num-retries`` (default 5) bounds the retries, with the
+    single-table loop's randomized, growing backoff between attempts."""
+    cur = load_view(catalog, identifier)
+    budget = commit_retries(cur.metadata.properties)
+    for attempt in range(budget + 1):
         md = cur.metadata
         next_id = max(v["version-id"] for v in md.versions) + 1
         schema = dict(schema)
@@ -376,8 +380,12 @@ def _replace_view(
         )
         if count == 1:
             return load_view(catalog, identifier)
+        if attempt < budget:
+            time.sleep(random.uniform(0.01, 0.05) * (attempt + 1))
+            cur = load_view(catalog, identifier)
     raise CommitConflictError(
-        f"replace view {identifier}: pointer kept moving after 5 attempts"
+        f"replace view {identifier}: pointer kept moving after "
+        f"{budget + 1} attempts"
     )
 
 

@@ -77,14 +77,6 @@ def text_bpe_ish_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _marker_case_sql() -> str:
-    score = lambda lang: (  # noqa: E731
-        f"len(list_intersect(toks, {LANG_MARKERS[lang]!r}))".replace("'", "'")
-    )
-    scores = ", ".join(f"len(list_intersect(toks, {LANG_MARKERS[l]!r}))" for l in LANG_MARKERS)
-    return scores
-
-
 @register(
     "text_lang_id_markers",
     oracle=f"""

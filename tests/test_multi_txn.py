@@ -212,3 +212,29 @@ def test_staging_guards(spark, catalog):
     with pytest.raises(ValueError, match="different catalog"):
         mt.transaction(foreign)
     assert MultiTableTransaction(catalog).commit() == []
+
+
+@pytest.mark.parametrize("prop, attempts", [("0", 1), (None, 6)], ids=["zero", "default"])
+def test_swap_budget_follows_commit_retries(spark, catalog, monkeypatch, prop, attempts):
+    """With no explicit ``max_retries`` the multi-table swap retries as often
+    as the smallest ``commit.retry.num-retries`` among the staged tables
+    allows (default 5): a swap that always conflicts is attempted
+    budget + 1 times."""
+    a = _seed(catalog, spark, "ns.a", [(1, 0)])
+    b = _seed(catalog, spark, "ns.b", [(2, 0)])
+    if prop is not None:
+        b = b.update_properties({"commit.retry.num-retries": prop})
+    swaps = []
+
+    def always_stale(updates):
+        swaps.append(len(updates))
+        raise CommitConflictError("stale")
+
+    monkeypatch.setattr(catalog, "update_tables", always_stale)
+    extra = spark.createDataFrame([(99, 9)], "k int, r int").coalesce(1)
+    mt = MultiTableTransaction(catalog)
+    mt.transaction(a).append_dataframe(extra)
+    mt.transaction(b).append_dataframe(extra)
+    with pytest.raises(CommitConflictError):
+        mt.commit()
+    assert swaps == [2] * attempts

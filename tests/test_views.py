@@ -289,3 +289,36 @@ def test_merge_using_view(spark, catalog):
         "WHEN MATCHED THEN UPDATE SET name = s.name",
     )
     assert all(x.name.endswith("_v") for x in t2.to_df(spark).collect())
+
+
+@pytest.mark.parametrize("prop, budget", [(None, 5), ("2", 2)], ids=["default", "two"])
+def test_replace_retry_budget_and_backoff(spark, catalog, monkeypatch, prop, budget):
+    """A view replace whose CAS never matches retries as often as the view's
+    ``commit.retry.num-retries`` allows (default 5), sleeping between
+    attempts with a growing backoff, then raises."""
+    import time
+
+    from iceberg_catalog_postgres_spark.catalog.catalog import CommitConflictError
+
+    _seed(catalog, spark)
+    ident = TableIdentifier.parse("d.v")
+    props = {} if prop is None else {"commit.retry.num-retries": prop}
+    create_view(spark, catalog, ident, "SELECT k FROM d.t", properties=props)
+    execute = catalog.backend.execute
+    cas = []
+    sleeps = []
+
+    def stale_cas(sql, params=()):
+        if sql.lstrip().startswith("UPDATE iceberg_views"):
+            cas.append(params)
+            return [], 0
+        return execute(sql, params)
+
+    monkeypatch.setattr(catalog.backend, "execute", stale_cas)
+    monkeypatch.setattr(time, "sleep", sleeps.append)
+    with pytest.raises(CommitConflictError, match=f"after {budget + 1} attempts"):
+        create_view(spark, catalog, ident, "SELECT r FROM d.t", or_replace=True)
+    assert len(cas) == budget + 1
+    assert len(sleeps) == budget
+    assert all(0.01 * (i + 1) <= s <= 0.05 * (i + 1) for i, s in enumerate(sleeps))
+    assert load_view(catalog, ident).metadata.current_version_id == 1
